@@ -55,6 +55,7 @@ ADDRESS = "address"
 INITIALS = "initials"
 INITIALS_TRIM = "initials_trim"
 PREFIX = "prefix"
+KINDS = (GOOD, WIKIDATA_TRIMMED, BOTH_TRIMMED, TRIM, ADDRESS, INITIALS, INITIALS_TRIM, PREFIX)
 
 _ROAD_WORDS = ("avenue", "street", "road", "boulevard", "drive", "lane", "square")
 _ROAD_ABBRS = ("ave", "st", "rd", "blvd", "dr", "ln", "sq")

@@ -633,10 +633,13 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
         import pandas as pd
 
         n = len(pdf)
+        # ids keep the input column's dtype: a string-id cell must not
+        # emit int64 ids into a string output column
+        no_ids = pdf["doc"].to_numpy()[:0]
         empty = pd.DataFrame(
             {
-                "left_id": pd.array([], dtype="int64"),
-                "right_id": pd.array([], dtype="int64"),
+                "left_id": no_ids,
+                "right_id": no_ids,
                 "cos": pd.array([], dtype="float64"),
             }
         )

@@ -4,8 +4,23 @@ The reference's resumability contract is a per-place state machine with a
 commit per stage (`/root/reference/matcher/place.py:1289-1330`) plus
 per-item done flags (place.py:1234).  The Spark equivalent: every pipeline
 stage writes its output table once under ``<run_dir>/<stage>``; re-running
-the pipeline with the same ``run_dir`` skips any stage whose ``_SUCCESS``
-marker exists and reads the stored output instead.
+the pipeline with the same ``run_dir`` skips any finished stage and reads
+the stored output instead.
+
+A stage also records its own numbers while it is written, so auditing it
+costs no job of its own:
+
+* an ``Observation`` on the write counts the rows (plus any aggregates the
+  caller passes) and :func:`stage` stores them, with the stage's schema, in
+  the ``_STAGE_METRICS.json`` sidecar (Spark's parquet reader skips
+  ``_``-prefixed files); :func:`stage_metrics` reads them back;
+* :func:`stage_partitions` reads rows per write task from the parquet
+  footers of the stage's ``part-NNNNN`` files.
+
+A stage is finished only when both ``_SUCCESS`` and the sidecar exist: the
+sidecar is written last, so a run that died between the parquet commit and
+the sidecar rebuilds the stage.  Reading a stored stage with the sidecar's
+schema also skips the schema-inference job ``spark.read.parquet`` launches.
 
 Storage is parquet-with-manifest.  (Iceberg gives the same semantics via
 snapshots, but the runtime jar is not available in this sandbox — the
@@ -18,15 +33,20 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST = "_PARAMS_MANIFEST.json"
+_METRICS = "_STAGE_METRICS.json"
+_PART_FILE = re.compile(r"part-(\d+)-")
 
 
 def _done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+    return all(os.path.exists(os.path.join(path, f)) for f in ("_SUCCESS", _METRICS))
 
 
 def _params_hash(params: dict | None) -> str | None:
@@ -49,13 +69,27 @@ def _manifest_matches(path: str, fingerprint: str | None) -> bool:
         return json.load(f).get("params_hash") == fingerprint
 
 
+def _read_record(path: str) -> dict:
+    with open(os.path.join(path, _METRICS)) as f:
+        return json.load(f)
+
+
+def _write_record(path: str, record: dict) -> None:
+    """Write the sidecar atomically: a crash leaves either no sidecar (the
+    stage rebuilds) or a whole one."""
+    tmp = os.path.join(path, "_" + _METRICS + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(record, f)
+    os.replace(tmp, os.path.join(path, _METRICS))
+
+
 def stage(
     spark: SparkSession,
     run_dir: str | None,
     name: str,
     build: Callable[[], DataFrame],
-    partition_by: list[str] | None = None,
     params: dict | None = None,
+    observe: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Materialise one pipeline stage, or reuse a prior run's output.
 
@@ -76,20 +110,56 @@ def stage(
     same ``run_dir`` with different parameters rebuilds the stage instead of
     silently reusing stale output (the ``_SUCCESS`` marker alone can't tell
     a max_block_size=50 run from a max_block_size=500 one).
+
+    ``observe`` names extra aggregates (``{"no_match": F.count_if(...)}``)
+    evaluated by the write itself, next to the ``rows`` count every durable
+    stage records; :func:`stage_metrics` returns them.  A stored stage
+    whose sidecar lacks one of them is rebuilt.  Ignored without
+    ``run_dir``.
     """
     if run_dir is None:
         return build().localCheckpoint(eager=False)
     path = os.path.join(run_dir, name)
     fingerprint = _params_hash(params)
-    if not (_done(path) and _manifest_matches(path, fingerprint)):
-        writer = build().write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+    observe = observe or {}
+    record = _read_record(path) if _done(path) else None
+    if not (
+        record
+        and _manifest_matches(path, fingerprint)
+        and set(observe) <= set(record["metrics"])
+    ):
+        frame = build()
+        obs = Observation()
+        aggs = {"rows": F.count(F.lit(1)), **observe}
+        frame.observe(obs, *[c.alias(k) for k, c in aggs.items()]).write.mode(
+            "overwrite"
+        ).parquet(path)
         if fingerprint is not None:
             with open(os.path.join(path, _MANIFEST), "w") as f:
                 json.dump({"params_hash": fingerprint, "params": params}, f, default=str)
-    return spark.read.parquet(path)
+        record = {"metrics": obs.get, "schema": frame.schema.jsonValue()}
+        _write_record(path, record)
+    # the recorded schema spares the schema-inference job of a plain read
+    return spark.read.schema(StructType.fromJson(record["schema"])).parquet(path)
+
+
+def stage_metrics(run_dir: str, name: str) -> dict[str, int]:
+    """The values observed while the stage was written: ``rows`` plus the
+    caller's ``observe`` aggregates."""
+    return _read_record(os.path.join(run_dir, name))["metrics"]
+
+
+def stage_partitions(run_dir: str, name: str) -> list[tuple[int, int]]:
+    """``(partition_id, rows)`` per write task, summed over the task's
+    ``part-NNNNN`` files from their parquet footers — no Spark job."""
+    path = os.path.join(run_dir, name)
+    rows: dict[int, int] = {}
+    for f in os.listdir(path):
+        m = _PART_FILE.match(f)
+        if m:
+            pid = int(m.group(1))
+            rows[pid] = rows.get(pid, 0) + pq.read_metadata(os.path.join(path, f)).num_rows
+    return sorted(rows.items())
 
 
 def completed_stages(run_dir: str) -> list[str]:

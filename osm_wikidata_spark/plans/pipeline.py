@@ -32,7 +32,13 @@ from ..functions.udfs import block_tokens_udf, pair_decision_udf
 from ..operators.blocking import build_blocks, salted_pair_join
 from ..operators.components import connected_components
 from ..sources.transcripts import ENDING_RULES, GLOBAL_ENDINGS
-from .audit import append_audit, block_skew_metrics, partition_metrics, score_distribution
+from .audit import (
+    append_audit,
+    append_partition_rows,
+    append_score_rows,
+    block_skew_metrics,
+    score_observations,
+)
 from .checkpoint import stage
 
 _MENTION_PATTERN = r'"([^"]+)"'
@@ -396,7 +402,12 @@ def run_pipeline(
     """Full blocking → scoring → clustering run.
 
     Returns the named stage outputs; with ``run_dir`` each stage is
-    checkpointed (resumable) and audited.
+    checkpointed (resumable) and audited under ``run_dir/audit``.  The
+    audit launches no job of its own except the block-skew aggregate:
+    ``partitions`` rows come from each stored stage's parquet footers and
+    ``scores`` rows from the kind counts observed on the edges write
+    (``plans.audit``); a reused stage is audited from the same files, so
+    a resume over finished stages launches only that aggregate.
 
     ``snm_window`` (opt-in, default off so existing runs are byte-stable)
     unions a sorted-neighborhood channel over each entity's primary name
@@ -435,7 +446,7 @@ def run_pipeline(
     run_id = run_id or uuid.uuid4().hex[:12]
 
     entities = stage(spark, run_dir, "entities", lambda: extract_entities(transcripts))
-    append_audit(partition_metrics(entities, run_id, "entities"), run_dir, "partitions")
+    append_partition_rows(run_dir, run_id, "entities")
 
     blocks = stage(
         spark,
@@ -501,7 +512,7 @@ def run_pipeline(
             "cnp_k": cnp_k,
         },
     )
-    append_audit(partition_metrics(pairs, run_id, "pairs"), run_dir, "partitions")
+    append_partition_rows(run_dir, run_id, "pairs")
 
     edges = stage(
         spark,
@@ -509,9 +520,10 @@ def run_pipeline(
         "edges",
         lambda: score_pairs(pairs, entities, endings),
         params={"endings": endings, "salt": salt, "max_block_size": max_block_size},
+        observe=score_observations(),
     )
-    append_audit(partition_metrics(edges, run_id, "edges"), run_dir, "partitions")
-    append_audit(score_distribution(edges, run_id), run_dir, "scores")
+    append_partition_rows(run_dir, run_id, "edges")
+    append_score_rows(run_dir, run_id, "edges")
 
     def _components() -> DataFrame:
         accepted = edges.filter(F.col("matched"))
@@ -527,7 +539,7 @@ def run_pipeline(
         )
 
     components = stage(spark, run_dir, "components", _components)
-    append_audit(partition_metrics(components, run_id, "components"), run_dir, "partitions")
+    append_partition_rows(run_dir, run_id, "components")
 
     out = {
         "entities": entities,

@@ -1798,6 +1798,38 @@ def test_semdedup_planted_clusters(spark):
     assert dropped == {(0, 3)}
 
 
+def test_semdedup_id_types_with_empty_cells(spark):
+    """Every id type semdedup's signature admits survives the kernel's
+    empty-output paths: a singleton cell (n < 2) and a cell whose pair
+    misses the threshold.  String ids used to fail there, because the
+    empty frame was hard-coded to int64."""
+    for id_type, ids in (
+        ("bigint", [1, 2, 3, 4, 5, 6]),
+        ("int", [1, 2, 3, 4, 5, 6]),
+        ("string", ["a", "b", "c", "d", "e", "f"]),
+    ):
+        vecs = spark.createDataFrame(
+            list(
+                zip(
+                    ids,
+                    [
+                        [1.0, 0.0, 0.0],
+                        [0.99, 0.1, 0.0],
+                        [0.97, 0.2, 0.0],  # cell 0: chain 1-2-3
+                        [0.0, 1.0, 0.0],  # cell 1: singleton
+                        [0.3, 0.0, 1.0],  # cell 2: cos 0.917, no pair
+                        [0.0, 0.3, 1.0],
+                    ],
+                )
+            ),
+            f"vec_id {id_type}, embedding array<double>",
+        )
+        cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+        out = similarity.semdedup(vecs, cents, threshold=0.95)
+        got = {(r["doc_id"], r["canonical_id"], r["cluster_size"]) for r in out.collect()}
+        assert got == {(i, ids[0], 3) for i in ids[:3]}, id_type
+
+
 def test_dsir_weights_rank_target_like_docs_higher(spark):
     """A doc sharing the target's vocabulary outscores one that shares
     nothing; weights are partitioning-invariant."""

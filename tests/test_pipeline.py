@@ -164,6 +164,28 @@ def test_checkpoint_resume(spark, tmp_path):
     )
 
 
+def test_resume_after_crash_before_metrics_sidecar(spark, tmp_path):
+    """Fault injection: the edges stage committed its parquet but the run
+    died before the stage's metrics sidecar was written.  The resume
+    rebuilds edges (and only edges) to identical output."""
+    transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
+    run_dir = os.path.join(str(tmp_path), "run")
+    first = run_pipeline(spark, transcripts, run_dir=run_dir, run_id="r1")
+    edges = sorted(first["edges"].collect())
+    components = sorted(first["components"].collect())
+    sidecar = os.path.join(run_dir, "edges", "_STAGE_METRICS.json")
+    os.remove(sidecar)
+    assert "edges" not in completed_stages(run_dir)
+    success = os.path.join(run_dir, "pairs", "_SUCCESS")
+    pairs_mtime = os.path.getmtime(success)
+
+    second = run_pipeline(spark, transcripts, run_dir=run_dir, run_id="r2")
+    assert os.path.exists(sidecar)
+    assert os.path.getmtime(success) == pairs_mtime  # pairs reused
+    assert sorted(second["edges"].collect()) == edges
+    assert sorted(second["components"].collect()) == components
+
+
 def test_audit_written(spark, tmp_path):
     transcripts, _ = synth_transcripts(spark, n_conversations=30, turns_per_conv=3)
     run_dir = os.path.join(str(tmp_path), "run2")
