@@ -12,12 +12,19 @@ DataFrame min-over-partition-window rounds:
 
 Each star pass is ONE shuffle: the per-node minimum is a window aggregate
 over the neighbour rows already co-located by u (a groupBy + join-back
-would shuffle the neighbour table a second time — see _large_star);
-convergence is when the edge set is a fixpoint (a forest of depth-1 stars
-whose centres are the component minima).  Rounds are ``localCheckpoint``-ed
-so lineage stays bounded — the 10^12-scale variant swaps that for a
-checkpoint-table write per round (plans/checkpoint.py) which also makes the
-loop resumable.
+would shuffle the neighbour table a second time — see _large_star).
+
+Convergence is when the edge set is a fixpoint of one large-star +
+small-star round.  Each round's edge set (and the canonical input) is
+materialised by ONE action, an eager ``localCheckpoint`` that keeps
+lineage bounded, and an ``Observation`` on that same action records the
+set signature (row count + Σ xxhash64) — no separate signature job.  The
+fixpoint is a star forest whose centres are the component minima (every
+edge is (root u < child v), every child has exactly one root), so the
+labels are read straight off it: (v → u) plus each distinct root
+(u → u).  The 10^12-scale variant swaps the local checkpoint for a
+checkpoint-table write per round (plans/checkpoint.py) which also makes
+the loop resumable.
 
 There is no reference implementation to cite — the reference enforces 1:1
 matches instead (`/root/reference/matcher/matcher.py:1429-1481`); transitive
@@ -26,7 +33,7 @@ clustering is graft-new per BASELINE.json.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -98,6 +105,29 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _canonical(rehung.union(centres))
 
 
+def _materialise(e: DataFrame, checkpoint: bool) -> tuple[DataFrame, tuple]:
+    """Run ONE action over the edge set ``e`` and return ``(e', sig)``.
+
+    ``e'`` is ``e`` localCheckpoint-ed by that action (under
+    ``checkpoint=False`` the action is a ``noop`` write and ``e'`` is
+    ``e``).  ``sig`` is the order-independent set signature an
+    ``Observation`` records on the same action: row count and the sum of
+    ``xxhash64(u, v)`` as ``decimal(38,0)`` (the hashes overflow bigint
+    under ANSI mode)."""
+    obs = Observation()
+    observed = e.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    )
+    if checkpoint:
+        e = observed.localCheckpoint(eager=True)
+    else:
+        observed.write.format("noop").mode("overwrite").save()
+    m = obs.get
+    return e, (m["n"], m["h"])
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "left_id",
@@ -107,8 +137,11 @@ def connected_components(
 ) -> DataFrame:
     """Label every node with the minimum node id of its component.
 
-    Returns ``(node, component)``.  O(log^2 n) rounds; on the chain/star
-    graphs of the tests, <10.
+    Returns ``(node, component)`` for every endpoint of a non-self-loop
+    edge.  O(log^2 n) rounds; on the chain/star graphs of the tests, <10.
+    Raises ``RuntimeError`` when the edge set is not a fixpoint after
+    ``max_iterations`` rounds: labels read off an unconverged edge set
+    would silently split components.
 
     HAZARD — ``checkpoint=False`` disables the per-round lineage cut
     entirely and is safe ONLY for graphs that converge in ~1 round
@@ -124,68 +157,29 @@ def connected_components(
     ``persist`` dedups execution but not the logical tree the planner
     walks, and an RDD round-trip pickles every row through Python.
     """
-    def _sig_agg(df: DataFrame) -> DataFrame:
-        """Order-independent set signature as a 1-row aggregate frame
-        (count + sum of row hashes) instead of an exceptAll join."""
-        return df.agg(
-            F.count("*").alias("n"),
-            # decimal sum: xxhash64 values overflow bigint under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        )
-
-    def _signature(df: DataFrame) -> tuple:
-        row = _sig_agg(df).first()
-        return (row["n"], row["h"])
-
-    # LAZY localCheckpoint + eager signature: the signature aggregate is
-    # the action that materialises (and thereby checkpoints) each round's
-    # edge set, so every round costs ONE job instead of two (the eager
-    # checkpoint job + a separate signature job) — at a fixed ~0.1-0.3 s
-    # of scheduling latency per job, that halves the per-round overhead
-    # that dominates CC on small/converged graphs while changing nothing
-    # at scale (the same partitions are computed once either way).
-    e = _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    if checkpoint:
-        e = e.localCheckpoint(eager=False)
-    sig = None
-
+    # ONE action per round: the eager localCheckpoint that materialises
+    # the round's edge set also carries the signature Observation, so
+    # convergence costs no job of its own (see _materialise).
+    e, sig = _materialise(
+        _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
+        checkpoint,
+    )
     for _ in range(max_iterations):
-        stepped = _small_star(_large_star(e))
-        if checkpoint:
-            stepped = stepped.localCheckpoint(eager=False)
-        if sig is None:
-            # round 1 folds the INPUT signature into its own job (a union
-            # of the two 1-row aggregates): the input checkpoint is a
-            # shared dependency computed once, so the former standalone
-            # input-signature action — pure per-action scheduling latency
-            # at any scale — disappears.  Signature values are unchanged.
-            rows = (
-                _sig_agg(e).withColumn("_w", F.lit(0))
-                .unionByName(_sig_agg(stepped).withColumn("_w", F.lit(1)))
-                .collect()
-            )
-            by = {r["_w"]: (r["n"], r["h"]) for r in rows}
-            sig, new_sig = by[0], by[1]
-        else:
-            new_sig = _signature(stepped)
-        e = stepped
+        e, new_sig = _materialise(_small_star(_large_star(e)), checkpoint)
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_iterations={max_iterations}; raise max_iterations"
+        )
 
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    # at the fixpoint edges are (root, child) with root < child
-    labels = (
-        e.select(F.col("v").alias("node"), F.col("u").alias("component"))
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
-    )
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
+    # a fixpoint of the round is a star forest: every edge is (root u <
+    # child v) and every child hangs off exactly one root, the component
+    # minimum — so no node distinct, min-aggregate or join is needed
+    return e.select(F.col("v").alias("node"), F.col("u").alias("component")).union(
+        e.select(F.col("u").alias("node"), F.col("u").alias("component")).distinct()
     )
 
 

@@ -621,11 +621,13 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
     the emitted double, so borderline rounding never crosses the Python
     boundary (margin 2e-6 ≫ the 5e-7 rounding half-step).
 
-    Pairs are oriented by a strict id comparison (equal-id pairs drop,
-    as under the former ``left_id < right_id`` join filter).  The pair
-    matrix is evaluated in ``block``×``block`` tiles so a degenerate
-    giant cell costs O(n²) work (as the former self-join did) but only
-    ~``block²`` transient memory.
+    Pairs are oriented by a strict id comparison, so ids must be unique
+    within a cell: a duplicate id raises ``ValueError`` naming it (one
+    O(n) pass over the already-sorted ids) instead of dropping its pairs.
+    The pair matrix is evaluated in ``block``×``block`` tiles so a
+    degenerate giant cell costs O(n²) work (as the former self-join did)
+    but only ~``block²`` transient memory for the pair matrix; the cell
+    itself is held whole, O(n·dim).
     """
 
     def kernel(pdf):
@@ -648,6 +650,14 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
         ids_raw = pdf["doc"].to_numpy()
         order = np.argsort(ids_raw, kind="stable")
         ids = ids_raw[order]
+        # sorted ids: equal neighbours are duplicates, whose pairs the
+        # strict ids[i] < ids[j] orientation below would silently drop
+        dup = np.flatnonzero(ids[1:] == ids[:-1])
+        if dup.size:
+            raise ValueError(
+                f"semdedup: duplicate id {ids[dup].tolist()[0]!r} in "
+                f"cell {pdf['cell'].iloc[0]}; id_col must hold unique ids"
+            )
         mat = np.stack(pdf["_v"].to_numpy()[order]).astype(np.float64)
         dim = mat.shape[1]
         acc = np.zeros(n, dtype=np.float64)
@@ -730,13 +740,15 @@ def semdedup(
     kernel only pre-filters with a superset margin, so every surviving
     pair is byte-identical to the join shape's.  A degenerate cell — one
     giant boilerplate cluster — is bounded by ``max_cell`` with the
-    dropped cells surfaced through ``dropped_sink``, never silently; an
-    uncapped giant cell is tiled (O(n²) work, bounded transient memory),
-    the same quadratic the former self-join paid.  Each vector lives in
-    exactly one cell, so candidate pairs are unique by construction (no
-    dedup shuffle needed, unlike multi-table LSH).  Assumes ``id_col``
-    holds unique ids (duplicate-id rows no longer fan out through the
-    former rehydration joins; equal-id pairs still drop).
+    dropped cells surfaced through ``dropped_sink``, never silently.  An
+    uncapped cell stays whole in ONE Python worker: its vectors are
+    resident at O(n·dim) (the Arrow batch plus a float64 matrix) and only
+    the O(n²) pair matrix is tiled, so a giant cell can exhaust a worker
+    where the former self-join merely ran long — set ``max_cell`` at
+    scale.  Each vector lives in exactly one cell, so candidate pairs are
+    unique by construction (no dedup shuffle needed, unlike multi-table
+    LSH).  ``id_col`` must hold unique ids: a duplicate id raises (in the
+    kernel, naming the id) rather than silently losing its pairs.
     """
     from .dedup import cap_buckets
 

@@ -22,6 +22,7 @@ from osm_wikidata_spark.plans.audit import (
 from osm_wikidata_spark.plans.checkpoint import stage
 from osm_wikidata_spark.plans.pipeline import run_pipeline
 from osm_wikidata_spark.sources.transcripts import synth_transcripts
+from tests.jobcount import jobs_in_group
 
 STAGES = ("entities", "pairs", "edges", "components")
 
@@ -38,18 +39,6 @@ def finished_run(spark, tmp_path_factory):
 def _audit(spark, run_dir, table, run_id):
     rows = spark.read.parquet(os.path.join(run_dir, "audit", table))
     return rows.filter(F.col("run_id") == run_id)
-
-
-def _jobs(spark, group, fn) -> int:
-    """Jobs ``fn`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_score_rows_equal_score_distribution(spark, finished_run):
@@ -122,12 +111,12 @@ def test_resume_launches_only_the_block_skew_jobs(spark, finished_run):
     """Re-running over a finished run_dir reads every stage and audits it
     from its files: the only jobs are the block-skew aggregate's."""
     transcripts, run_dir, out = finished_run
-    resume = _jobs(
+    resume = jobs_in_group(
         spark,
         "test-audit-resume",
         lambda: run_pipeline(spark, transcripts, run_dir=run_dir, run_id="resume"),
     )
-    skew = _jobs(
+    skew = jobs_in_group(
         spark,
         "test-audit-skew",
         lambda: append_audit(block_skew_metrics(out["blocks"], "skew"), run_dir, "blocks"),

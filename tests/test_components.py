@@ -4,9 +4,11 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_wikidata_spark.operators.components import connected_components
+from tests.jobcount import jobs_in_group
 
 
 def _union_find(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -171,3 +173,104 @@ def test_checkpoint_off_on_converged_star_forest(spark):
         for r in connected_components(df, checkpoint=False).collect()
     }
     assert on == off and on == _union_find(edges)
+
+
+def test_max_iterations_exhausted_raises(spark):
+    """Labels read off an unconverged edge set split components, so
+    running out of rounds fails loudly instead of returning them."""
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(39)]
+    df = spark.createDataFrame(edges, "left_id string, right_id string")
+    with pytest.raises(RuntimeError, match="max_iterations=1"):
+        connected_components(df, max_iterations=1)
+
+
+def _oracle(edges) -> dict:
+    """Union-find labels of every endpoint of a non-self-loop edge."""
+    return _union_find([(a, b) for a, b in edges if a != b])
+
+
+_DEGENERATE = {
+    "empty": [],
+    "self_loops_only": [(i, i) for i in range(5)],
+    # hub in the middle of its leaves' id range, one leaf bridged to a chain
+    "hub_and_chain": [(1000, i) for i in range(2001) if i != 1000]
+    + [(2000, 3000)]
+    + [(i, i + 1) for i in range(3000, 3040)],
+    "duplicates_and_reversed": [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (4, 5), (5, 4)]
+    + [(6, 6)],
+}
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+def test_id_types_and_degenerate_inputs(spark, id_type, case):
+    """Every id type the signature admits, on inputs at the edges of the
+    fixpoint loop (nothing to converge, one round, a high-degree star
+    attached to a long chain, redundant edges).  String ids are the
+    decimal text, so their order differs from the numeric one."""
+    edges = _DEGENERATE[case]
+    if id_type == "string":
+        edges = [(str(a), str(b)) for a, b in edges]
+    df = spark.createDataFrame(edges, f"left_id {id_type}, right_id {id_type}")
+    rows = connected_components(df).collect()
+    got = {r["node"]: r["component"] for r in rows}
+    assert len(rows) == len(got)  # one label per node
+    assert got == _oracle(edges)
+
+
+def test_chain_probe_job_count(spark):
+    """The chain probe (1,499 nodes, every 10th link cut) costs one job
+    per exchange and one checkpoint job per materialised edge set, whose
+    signature rides on the checkpoint: 24 jobs."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 1499) if (i + 1) % 10 != 0],
+        "left_id bigint, right_id bigint",
+    )
+    got = {}
+
+    def run():
+        labels = connected_components(edges)
+        labels.write.format("noop").mode("overwrite").save()
+        got["labels"] = labels
+
+    assert jobs_in_group(spark, "cc-chain-probe", run) <= 24
+    assert got["labels"].select("component").distinct().count() == 150
+
+
+def test_no_separate_signature_action():
+    """The fixpoint signature is observed on the action that materialises
+    each round, so the module has no driver-side fetch of its own."""
+    import inspect
+    import re
+
+    from osm_wikidata_spark.operators import components
+
+    src = inspect.getsource(components)
+    # DataFrame actions; F.count(...) is an aggregate expression, not one
+    assert not re.search(r"(?<!\bF)\.(collect|first|take|head|count|toPandas)\(", src)
+
+
+def test_pipeline_components_stage_job_count(spark, tmp_path, monkeypatch):
+    """A durable run's components stage on this input converges in one
+    round: 2 jobs for the canonical input, 4 for the round (3 exchanges +
+    the checkpoint), 3 for the labels' distinct roots, the singleton join
+    and the write."""
+    from osm_wikidata_spark.plans import pipeline
+    from osm_wikidata_spark.sources.transcripts import synth_transcripts
+
+    real_stage = pipeline.stage
+    jobs = {}
+
+    def counted_stage(spark_, run_dir, name, build, **kw):
+        out = {}
+        jobs[name] = jobs_in_group(
+            spark_,
+            f"pipeline-stage-{name}",
+            lambda: out.setdefault("df", real_stage(spark_, run_dir, name, build, **kw)),
+        )
+        return out["df"]
+
+    monkeypatch.setattr(pipeline, "stage", counted_stage)
+    transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
+    pipeline.run_pipeline(spark, transcripts, run_dir=str(tmp_path / "run"), run_id="jobs")
+    assert jobs["components"] <= 9

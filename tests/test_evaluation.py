@@ -277,3 +277,37 @@ def test_cluster_cohesion_duplicate_edge_weights_take_max(spark):
     assert row["n_edges"] == 1
     assert row["min_weight"] == pytest.approx(0.9)
     assert row["avg_weight"] == pytest.approx(0.9)
+
+
+def test_blocking_metrics_truth_normalized_holds(spark):
+    """q_blocking_metrics passes truth_normalized=True on the proof that
+    its two-word-prefix truth is unique and oriented: pin both, and that
+    skipping the normalisation leaves the metrics unchanged."""
+    import os
+
+    import __spark_entry__ as entry
+    from pyspark.sql import functions as F
+
+    from osm_wikidata_spark.operators.evaluation import blocking_metrics
+    from osm_wikidata_spark.operators.neighborhood import sorted_neighborhood_pairs
+    from tests.test_plans import SF
+
+    path = os.path.join(SF, "part.parquet")
+    if not os.path.exists(path):
+        pytest.skip("driver testdata not present")
+    part = spark.read.parquet(path)
+    truth = entry._two_word_prefix_truth(part)
+    assert truth.count() > 0
+    assert truth.filter(F.col("left_id") >= F.col("right_id")).count() == 0
+    dup = truth.groupBy("left_id", "right_id").count().filter(F.col("count") > 1)
+    assert dup.count() == 0
+
+    cand = sorted_neighborhood_pairs(part, "p_partkey", "p_name", window=4).select(
+        "left_id", "right_id"
+    )
+    n = part.count()
+    fast, full = (
+        blocking_metrics(cand, truth, n_records=n, truth_normalized=flag).collect()
+        for flag in (True, False)
+    )
+    assert fast == full

@@ -3,6 +3,8 @@ operators with planted ground truth."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from osm_wikidata_spark.operators import dedup, resolve, similarity, textstats
@@ -1828,6 +1830,20 @@ def test_semdedup_id_types_with_empty_cells(spark):
         out = similarity.semdedup(vecs, cents, threshold=0.95)
         got = {(r["doc_id"], r["canonical_id"], r["cluster_size"]) for r in out.collect()}
         assert got == {(i, ids[0], 3) for i in ids[:3]}, id_type
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_semdedup_duplicate_id_fails_loudly(spark, id_type):
+    """Two rows sharing an id in one cell would lose their pairs to the
+    kernel's strict id orientation; the kernel raises, naming the id."""
+    ids = [7, 3, 7] if id_type == "bigint" else ["g", "c", "g"]
+    vecs = spark.createDataFrame(
+        list(zip(ids, [[1.0, 0.0], [0.99, 0.1], [0.98, 0.12]])),
+        f"vec_id {id_type}, embedding array<double>",
+    )
+    dup = "7" if id_type == "bigint" else "'g'"
+    with pytest.raises(PythonException, match=f"duplicate id {dup} in cell 0"):
+        similarity.semdedup(vecs, [[1.0, 0.0], [0.0, 1.0]], threshold=0.95).collect()
 
 
 def test_dsir_weights_rank_target_like_docs_higher(spark):
