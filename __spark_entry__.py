@@ -2067,7 +2067,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # documents with POLYMORPHIC claims (entity-id P31, coordinate
         # P625, plain-string P1216) built deterministically from nation
         # rows, grouped one response per region, round-tripped through the
-        # mapInPandas payload parser; the oracle recomputes the expected
+        # Arrow-batch payload parser; the oracle recomputes the expected
         # typed rows straight from the table
         from osm_wikidata_spark.sources.api_payloads import parse_wbgetentities
 
@@ -2205,7 +2205,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_media_resize(spark, sf):
-        # multimodal resize plumbing: mapInPandas, schema preserved, fake
+        # multimodal resize plumbing: Arrow-batch kernel, schema preserved, fake
         # md5 kernel is engine-portable → exact DuckDB oracle
         from osm_wikidata_spark.operators.multimodal import resize_images, synth_media
 

@@ -105,25 +105,20 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _canonical(rehung.union(centres))
 
 
-def _materialise(e: DataFrame, checkpoint: bool) -> tuple[DataFrame, tuple]:
+def _materialise(e: DataFrame) -> tuple[DataFrame, tuple]:
     """Run ONE action over the edge set ``e`` and return ``(e', sig)``.
 
-    ``e'`` is ``e`` localCheckpoint-ed by that action (under
-    ``checkpoint=False`` the action is a ``noop`` write and ``e'`` is
-    ``e``).  ``sig`` is the order-independent set signature an
-    ``Observation`` records on the same action: row count and the sum of
-    ``xxhash64(u, v)`` as ``decimal(38,0)`` (the hashes overflow bigint
-    under ANSI mode)."""
+    ``e'`` is ``e`` localCheckpoint-ed by that action.  ``sig`` is the
+    order-independent set signature an ``Observation`` records on the same
+    action: row count and the sum of ``xxhash64(u, v)`` as
+    ``decimal(38,0)`` (the hashes overflow bigint under ANSI mode)."""
     obs = Observation()
     observed = e.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
     )
-    if checkpoint:
-        e = observed.localCheckpoint(eager=True)
-    else:
-        observed.write.format("noop").mode("overwrite").save()
+    e = observed.localCheckpoint(eager=True)
     m = obs.get
     return e, (m["n"], m["h"])
 
@@ -133,7 +128,6 @@ def connected_components(
     src: str = "left_id",
     dst: str = "right_id",
     max_iterations: int = 30,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Label every node with the minimum node id of its component.
 
@@ -142,30 +136,15 @@ def connected_components(
     Raises ``RuntimeError`` when the edge set is not a fixpoint after
     ``max_iterations`` rounds: labels read off an unconverged edge set
     would silently split components.
-
-    HAZARD — ``checkpoint=False`` disables the per-round lineage cut
-    entirely and is safe ONLY for graphs that converge in ~1 round
-    (already-canonical star forests, e.g. re-verifying a stored
-    assignment): every star pass references its input 2-4×, so the uncut
-    plan tree grows exponentially per round and analysis/AQE-re-optimise
-    walk the whole tree — MEASURED as a planning livelock on a 50-edge /
-    6-round toy graph.  It is NOT a dynamic-allocation escape hatch from
-    ``localCheckpoint``'s executor-pinned blocks; on clusters with
-    executor churn use the checkpoint-TABLE loop (one stage-table write
-    per round via plans/checkpoint.py, which is also what makes the
-    10^12-edge run resumable) instead.  PySpark offers no third cut:
-    ``persist`` dedups execution but not the logical tree the planner
-    walks, and an RDD round-trip pickles every row through Python.
     """
     # ONE action per round: the eager localCheckpoint that materialises
     # the round's edge set also carries the signature Observation, so
     # convergence costs no job of its own (see _materialise).
     e, sig = _materialise(
-        _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
-        checkpoint,
+        _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     )
     for _ in range(max_iterations):
-        e, new_sig = _materialise(_small_star(_large_star(e)), checkpoint)
+        e, new_sig = _materialise(_small_star(_large_star(e)))
         if new_sig == sig:
             break
         sig = new_sig
@@ -189,7 +168,6 @@ def incremental_components(
     src: str = "left_id",
     dst: str = "right_id",
     max_iterations: int = 30,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fold a batch of new match edges into an existing ``(node,
     component)`` assignment WITHOUT re-clustering the full graph.
@@ -228,9 +206,7 @@ def incremental_components(
             F.coalesce("cv", "v").alias("right_id"),
         )
     )
-    meta = connected_components(
-        contracted, max_iterations=max_iterations, checkpoint=checkpoint
-    )
+    meta = connected_components(contracted, max_iterations=max_iterations)
 
     # re-label merged components: one join keyed on the (batch-sized) meta
     relabel = meta.select(

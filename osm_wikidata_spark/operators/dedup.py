@@ -26,6 +26,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.arrow import map_batches
+
 
 def cap_buckets(
     band_keys: DataFrame, key_cols: list[str], max_bucket: int | None
@@ -34,7 +36,12 @@ def cap_buckets(
 
     Returns ``(kept, dropped)``: rows of ``band_keys`` whose bucket holds
     2..max_bucket members, and an audit frame (key_cols..., n) of the
-    oversized buckets that were dropped.  With the cap, a band self-join
+    oversized buckets that were dropped.  With ``max_bucket=None`` nothing
+    is capped: ``kept`` is ``band_keys`` itself, singleton buckets
+    included (every caller drops them anyway: a ``left < right``
+    self-join emits no pair for one, nor does semdedup's cell kernel),
+    and ``dropped`` is a lazy empty frame — no size aggregate and no keep
+    join run.  With the cap, a band self-join
     emits at most ``n_buckets_kept * max_bucket^2 / 2`` candidate rows —
     linear in corpus size — instead of the quadratic blow-up a degenerate
     corpus (billions of boilerplate near-identical docs) would cause.
@@ -54,13 +61,11 @@ def cap_buckets(
     """
     sizes = band_keys.groupBy(*key_cols).agg(F.count("*").alias("n"))
     if max_bucket is None:
-        keep = sizes.filter(F.col("n") > 1).select(*key_cols)
-        dropped = sizes.filter(F.lit(False)).select(*key_cols, "n")
-    else:
-        keep = sizes.filter(
-            (F.col("n") > 1) & (F.col("n") <= max_bucket)
-        ).select(*key_cols)
-        dropped = sizes.filter(F.col("n") > max_bucket).select(*key_cols, "n")
+        return band_keys, sizes.filter(F.lit(False))
+    keep = sizes.filter(
+        (F.col("n") > 1) & (F.col("n") <= max_bucket)
+    ).select(*key_cols)
+    dropped = sizes.filter(F.col("n") > max_bucket)
     return band_keys.join(keep, key_cols), dropped
 
 
@@ -532,7 +537,7 @@ def ngram_jaccard_pairs(
 
 
 def _simhash_vote_kernel(bits: int):
-    """Arrow-batch kernel: fold a document's shingle-hash array into its
+    """Batch kernel: fold a document's shingle-hash array into its
     ``bits``-bit SimHash with exact integer bit-count votes.
 
     Bit b of the output is set iff more than half the shingles have bit b
@@ -546,27 +551,22 @@ def _simhash_vote_kernel(bits: int):
     a degenerate multi-million-shingle doc.
     """
 
-    def kernel(batches):
+    def kernel(pdf):
         import numpy as np
-        import pandas as pd
 
         shifts = np.arange(bits, dtype=np.uint64)
-        for pdf in batches:
-            sims = []
-            for h in pdf["_h"]:
-                arr = np.asarray(h, dtype=np.int64).astype(np.uint64)
-                n = len(arr)
-                ones = np.zeros(bits, dtype=np.int64)
-                for lo in range(0, n, 65536):
-                    chunk = arr[lo: lo + 65536]
-                    ones += (
-                        (chunk[:, None] >> shifts[None, :]) & np.uint64(1)
-                    ).sum(axis=0).astype(np.int64)
-                sim = int(((2 * ones > n).astype(np.uint64) << shifts).sum())
-                sims.append(sim)
-            yield pd.DataFrame(
-                {"doc": pdf["doc"], "sim": pd.array(sims, dtype="Int64")}
-            )
+        sims = np.zeros(len(pdf), dtype=np.int64)
+        for i, h in enumerate(pdf["_h"]):
+            arr = np.asarray(h, dtype=np.int64).astype(np.uint64)
+            n = len(arr)
+            ones = np.zeros(bits, dtype=np.int64)
+            for lo in range(0, n, 65536):
+                chunk = arr[lo: lo + 65536]
+                ones += (
+                    (chunk[:, None] >> shifts[None, :]) & np.uint64(1)
+                ).sum(axis=0).astype(np.int64)
+            sims[i] = int(((2 * ones > n).astype(np.uint64) << shifts).sum())
+        return {"doc": pdf["doc"], "sim": sims}
 
     return kernel
 
@@ -609,8 +609,8 @@ def simhash_table(
         ).alias("_h"),
     )
     id_type = prepared.schema["doc"].dataType.simpleString()
-    return prepared.mapInPandas(
-        _simhash_vote_kernel(bits), f"doc {id_type}, sim long"
+    return map_batches(
+        prepared, _simhash_vote_kernel(bits), f"doc {id_type}, sim long"
     )
 
 

@@ -145,7 +145,6 @@ def blocking_metrics(
     left_col: str = "left_id",
     right_col: str = "right_id",
     precision: int = 6,
-    candidates_normalized: bool = False,
     truth_normalized: bool = False,
 ) -> DataFrame:
     """Blocking-scheme quality: pair completeness / pair quality /
@@ -162,15 +161,15 @@ def blocking_metrics(
     size for the reduction ratio — passed, not inferred, because the
     candidate table no longer knows about records it never paired.
 
-    ``candidates_normalized`` / ``truth_normalized`` (opt-in, r06): skip
-    that side's least/greatest + distinct when the CALLER can prove its
-    pairs are already unique with ``left < right`` — a generator whose
+    ``truth_normalized`` (opt-in, r06): skip the truth side's
+    least/greatest + distinct when the CALLER can prove its pairs are
+    already unique with ``left < right`` — a generator whose
     construction guarantees it (e.g. an equi-self-join on a key each
     record carries once, filtered ``left < right``).  The distinct is one
     full exchange of a pair set that is often quadratic-ish in corpus
     size, so skipping a provably redundant one is a real win (measured
     sf0.1 q_blocking_metrics: 3.13 s → 2.16 s); claiming it falsely
-    inflates that side's counts — it is the caller's proof obligation.
+    inflates the truth counts — it is the caller's proof obligation.
 
     Scale shape: ONE plan — two distincts feeding one full-outer join on
     the normalised pair key, then a single scalar aggregate over presence
@@ -181,7 +180,7 @@ def blocking_metrics(
     no window.
     """
 
-    def _norm(pairs: DataFrame, flag: str, normalized: bool) -> DataFrame:
+    def _norm(pairs: DataFrame, flag: str, normalized: bool = False) -> DataFrame:
         a, b = F.col(left_col), F.col(right_col)
         if normalized:
             return pairs.select(
@@ -195,7 +194,7 @@ def blocking_metrics(
             .withColumn(flag, F.lit(1))
         )
 
-    both = _norm(candidates, "_c", candidates_normalized).join(
+    both = _norm(candidates, "_c").join(
         _norm(truth, "_t", truth_normalized), ["_pa", "_pb"], "full_outer"
     )
     counts = both.agg(

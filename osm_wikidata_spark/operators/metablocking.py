@@ -64,20 +64,7 @@ def block_edge_weights(
     # former counts-dim join-back re-shuffled the much larger PAIR frame
     # twice (node dims at 10^9 entities are far past broadcast range)
     m = m.withColumn("_nb", F.count("*").over(Window.partitionBy(id_col)))
-    if max_block is None:
-        # no cap requested: cap_buckets would run a block-size aggregate +
-        # keep join whose only effect is dropping SINGLETON blocks — which
-        # the left < right self-join below drops anyway (a 1-member block
-        # emits only its self-pair).  Skip both stages (the semdedup
-        # max_cell=None pattern; r06 A/B on the CNP consumer: identical
-        # 33,650-row output, 2.0/3.0 s → 1.8/1.9 s min/avg).  Singleton
-        # rows riding the join are O(N) probe noise at any scale.
-        kept = m
-        dropped = (
-            m.groupBy(block_col).agg(F.count("*").alias("n")).filter(F.lit(False))
-        )
-    else:
-        kept, dropped = cap_buckets(m, [block_col], max_block)
+    kept, dropped = cap_buckets(m, [block_col], max_block)
     if dropped_sink is not None:
         dropped_sink(dropped)
     left = kept.select(

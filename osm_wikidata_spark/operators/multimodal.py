@@ -1,20 +1,17 @@
 """Multimodal column plumbing (driver mandate).
 
 Image/audio/video payloads are opaque ``binary`` columns with typed
-metadata; decode / feature-extract run as Arrow-batched ``mapInPandas``
-stages.  The decode kernels themselves are STUBBED (no codec libraries in
-this container): ``decode_stub=True`` computes deterministic fake features
-(hash-derived), while the Spark-side contract — schema, batching,
-partitioning — is real and tested.  Swapping in PIL/torchaudio later only
+metadata; decode / feature-extract run as Arrow-batch kernels
+(``functions.arrow.map_batches``).  The decode kernels themselves are
+STUBBED (no codec libraries in this container): ``decode_stub=True``
+computes deterministic fake features (hash-derived), while the Spark-side
+contract — schema, batching, partitioning — is real and tested.  Swapping in PIL/torchaudio later only
 replaces ``_fake_feature``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -26,6 +23,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.arrow import map_batches
 
 MEDIA_SCHEMA = StructType(
     [
@@ -92,7 +91,7 @@ FRAME_SCHEMA = StructType(
 
 
 def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize every image-kind payload (mapInPandas; non-images pass
+    """Resize every image-kind payload (a batch kernel; non-images pass
     through untouched).
 
     The pixel kernel is the deterministic fake ``md5(payload ++
@@ -104,24 +103,22 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
 
     suffix = f":{width}x{height}".encode()
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            is_img = pdf["kind"] == "image"
-            pdf = pdf.copy()
-            pdf.loc[is_img, "payload"] = [
-                hashlib.md5(bytes(p) + suffix).hexdigest().encode()
-                for p in pdf.loc[is_img, "payload"]
-            ]
-            pdf.loc[is_img, "width"] = width
-            pdf.loc[is_img, "height"] = height
-            yield pdf
+    def _resize(pdf):
+        is_img = pdf["kind"] == "image"
+        pdf.loc[is_img, "payload"] = [
+            hashlib.md5(bytes(p) + suffix).hexdigest().encode()
+            for p in pdf.loc[is_img, "payload"]
+        ]
+        pdf.loc[is_img, "width"] = width
+        pdf.loc[is_img, "height"] = height
+        return pdf
 
-    return media.mapInPandas(_batches, schema=MEDIA_SCHEMA)
+    return map_batches(media, _resize, MEDIA_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 250) -> DataFrame:
     """Sample frames from video-kind payloads every ``every_ms`` — a
-    one-to-many mapInPandas (the UDTF shape: one video row → one row per
+    one-to-many batch kernel (the UDTF shape: one video row → one row per
     sampled frame).
 
     Frame decode is the deterministic fake ``md5(payload ++ ':frame:i')``;
@@ -129,45 +126,39 @@ def sample_frames(media: DataFrame, every_ms: int = 250) -> DataFrame:
     """
     import hashlib
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = pdf[pdf["kind"] == "video"]
-            out = {"media_id": [], "frame_idx": [], "ts_ms": [], "payload": []}
-            for _, row in vids.iterrows():
-                n_frames = max(int(row["duration_ms"]) // every_ms, 1)
-                for i in range(n_frames):
-                    out["media_id"].append(row["media_id"])
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(i * every_ms)
-                    out["payload"].append(
-                        hashlib.md5(
-                            bytes(row["payload"]) + f":frame:{i}".encode()
-                        ).hexdigest().encode()
-                    )
-            yield pd.DataFrame(out)
+    def _frames(pdf):
+        out = {"media_id": [], "frame_idx": [], "ts_ms": [], "payload": []}
+        for _, row in pdf[pdf["kind"] == "video"].iterrows():
+            n_frames = max(int(row["duration_ms"]) // every_ms, 1)
+            for i in range(n_frames):
+                out["media_id"].append(row["media_id"])
+                out["frame_idx"].append(i)
+                out["ts_ms"].append(i * every_ms)
+                out["payload"].append(
+                    hashlib.md5(
+                        bytes(row["payload"]) + f":frame:{i}".encode()
+                    ).hexdigest().encode()
+                )
+        return out
 
-    return media.mapInPandas(_batches, schema=FRAME_SCHEMA)
+    return map_batches(media, _frames, FRAME_SCHEMA)
 
 
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the opaque payload column.
 
-    ``mapInPandas`` keeps whole record batches in Python once per partition —
-    the right shape for codec work (decoder init amortised per batch).
+    A batch kernel sees whole record batches in Python — the right shape
+    for codec work (decoder init amortised per batch).
     """
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feature": [
-                        _fake_feature(p, k)
-                        for p, k in zip(pdf["payload"], pdf["kind"])
-                    ],
-                    "n_bytes": pdf["payload"].map(len).astype("int32"),
-                }
-            )
+    def _features(pdf):
+        return {
+            "media_id": pdf["media_id"],
+            "kind": pdf["kind"],
+            "feature": [
+                _fake_feature(p, k) for p, k in zip(pdf["payload"], pdf["kind"])
+            ],
+            "n_bytes": pdf["payload"].map(len),
+        }
 
-    return media.mapInPandas(_batches, schema=FEATURE_SCHEMA)
+    return map_batches(media, _features, FEATURE_SCHEMA)

@@ -27,7 +27,8 @@ function of ONE document, so nothing should ever cross the wire.  The
 JVM side owns every string-semantics step (normalise, split, trim,
 lengths) and the final fraction/rounding arithmetic; the per-document
 run counting — pure INTEGER combinatorics once words are keyed — runs
-as one Arrow-batched numpy kernel (``mapInPandas``, a map: no exchange).
+as one Arrow-batched numpy kernel (``functions.arrow.map_batches``, a
+map: no exchange).
 History of the shape, both measured at sf0.1:
 
 * round 4 exploded ~n×W gram rows per document through two hash
@@ -55,6 +56,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.arrow import map_batches
 from .dedup import normalize_text
 from .scoring import quote_sep
 
@@ -62,7 +64,7 @@ _PACK = 4294967296  # 2^32: (count, chars) packed into one BIGINT
 
 
 def _stats_kernel(all_ns: tuple[int, ...]):
-    """Arrow-batch kernel: exact integer run stats over prepared rows.
+    """Batch kernel: exact integer run stats over prepared rows.
 
     Input rows carry ``(doc_id, total_chars, _wh, _wl, _lines)`` — all
     string semantics (normalise/split/trim/length) already applied
@@ -85,142 +87,131 @@ def _stats_kernel(all_ns: tuple[int, ...]):
     All arithmetic is int64; no floats, no string ops, no randomness.
     """
 
-    def kernel(batches):
+    def kernel(pdf):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            m = len(pdf)
-            out = {
-                "doc_id": pdf["doc_id"],
-                "total_chars": pdf["total_chars"],
-            }
-            n_lines = np.zeros(m, dtype=np.int64)
-            n_line_chars = np.zeros(m, dtype=np.int64)
-            dup_lines = np.zeros(m, dtype=np.int64)
-            dup_line_chars = np.zeros(m, dtype=np.int64)
-            for i, lines in enumerate(pdf["_lines"]):
-                if lines is None:
-                    continue
-                counts: dict = {}
-                tot = 0
-                for ln in lines:
-                    counts[ln] = counts.get(ln, 0) + 1
-                    tot += len(ln)
-                n_lines[i] = len(lines)
-                n_line_chars[i] = tot
-                dl = dlc = 0
-                for ln, c in counts.items():
-                    if c > 1:
-                        dl += c
-                        dlc += c * len(ln)
-                dup_lines[i] = dl
-                dup_line_chars[i] = dlc
-            out.update(
-                n_lines=n_lines, n_line_chars=n_line_chars,
-                dup_lines=dup_lines, dup_line_chars=dup_line_chars,
-            )
+        m = len(pdf)
+        out = {
+            "doc_id": pdf["doc_id"],
+            "total_chars": pdf["total_chars"],
+        }
+        n_lines = np.zeros(m, dtype=np.int64)
+        n_line_chars = np.zeros(m, dtype=np.int64)
+        dup_lines = np.zeros(m, dtype=np.int64)
+        dup_line_chars = np.zeros(m, dtype=np.int64)
+        for i, lines in enumerate(pdf["_lines"]):
+            if lines is None:
+                continue
+            counts: dict = {}
+            tot = 0
+            for ln in lines:
+                counts[ln] = counts.get(ln, 0) + 1
+                tot += len(ln)
+            n_lines[i] = len(lines)
+            n_line_chars[i] = tot
+            dl = dlc = 0
+            for ln, c in counts.items():
+                if c > 1:
+                    dl += c
+                    dlc += c * len(ln)
+            dup_lines[i] = dl
+            dup_line_chars[i] = dlc
+        out.update(
+            n_lines=n_lines, n_line_chars=n_line_chars,
+            dup_lines=dup_lines, dup_line_chars=dup_line_chars,
+        )
 
-            whs = pdf["_wh"].to_numpy()
-            wls = pdf["_wl"].to_numpy()
-            valid_rows = np.array([w is not None for w in whs], dtype=bool)
-            tops = {n: np.full(m, np.nan) for n in all_ns}
-            dups = {n: np.full(m, np.nan) for n in all_ns}
-            if valid_rows.any():
-                arrs = [np.asarray(whs[i], dtype=np.int64)
-                        for i in range(m) if valid_rows[i]]
-                lens = [np.asarray(wls[i], dtype=np.int64)
-                        for i in range(m) if valid_rows[i]]
-                row_ids = np.flatnonzero(valid_rows)
-                W = np.array([len(a) for a in arrs], dtype=np.int64)
-                flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
-                flen = np.concatenate(lens) if lens else np.empty(0, np.int64)
-                starts = np.zeros(len(arrs) + 1, dtype=np.int64)
-                np.cumsum(W, out=starts[1:])
-                doc_of = np.repeat(np.arange(len(arrs)), W)
-                cum = np.zeros(len(flat) + 1, dtype=np.int64)
-                np.cumsum(flen, out=cum[1:])
-                _, ids = np.unique(flat, return_inverse=True)
-                ids = ids.astype(np.int64)
+        whs = pdf["_wh"].to_numpy()
+        wls = pdf["_wl"].to_numpy()
+        valid_rows = np.array([w is not None for w in whs], dtype=bool)
+        # rows without words stay masked: null top/dup counts
+        tops = {n: np.ma.masked_all(m, np.int64) for n in all_ns}
+        dups = {n: np.ma.masked_all(m, np.int64) for n in all_ns}
+        if valid_rows.any():
+            arrs = [np.asarray(whs[i], dtype=np.int64)
+                    for i in range(m) if valid_rows[i]]
+            lens = [np.asarray(wls[i], dtype=np.int64)
+                    for i in range(m) if valid_rows[i]]
+            row_ids = np.flatnonzero(valid_rows)
+            W = np.array([len(a) for a in arrs], dtype=np.int64)
+            flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
+            flen = np.concatenate(lens) if lens else np.empty(0, np.int64)
+            starts = np.zeros(len(arrs) + 1, dtype=np.int64)
+            np.cumsum(W, out=starts[1:])
+            doc_of = np.repeat(np.arange(len(arrs)), W)
+            cum = np.zeros(len(flat) + 1, dtype=np.int64)
+            np.cumsum(flen, out=cum[1:])
+            _, ids = np.unique(flat, return_inverse=True)
+            ids = ids.astype(np.int64)
 
-                def pack(a, b):
-                    # operand codes are factorized (< corpus positions
-                    # < 2^32), so the 32/32 pack is collision-free
-                    c = (a << np.int64(32)) | b
-                    _, inv = np.unique(c, return_inverse=True)
-                    return inv.astype(np.int64)
+            def pack(a, b):
+                # operand codes are factorized (< corpus positions
+                # < 2^32), so the 32/32 pack is collision-free
+                c = (a << np.int64(32)) | b
+                _, inv = np.unique(c, return_inverse=True)
+                return inv.astype(np.int64)
 
-                codes = {1: ids}
+            codes = {1: ids}
 
-                def code_for(n: int):
-                    # code of the length-n window at each flat position p
-                    # (positions whose window crosses a doc boundary get a
-                    # garbage code; they are filtered before counting)
-                    if n in codes:
-                        return codes[n]
-                    half = n // 2
-                    a = code_for(half)
-                    b = code_for(n - half)
-                    c = pack(a[: len(flat) - n + 1],
-                             b[half: half + len(flat) - n + 1])
-                    codes[n] = c
-                    return c
+            def code_for(n: int):
+                # code of the length-n window at each flat position p
+                # (positions whose window crosses a doc boundary get a
+                # garbage code; they are filtered before counting)
+                if n in codes:
+                    return codes[n]
+                half = n // 2
+                a = code_for(half)
+                b = code_for(n - half)
+                c = pack(a[: len(flat) - n + 1],
+                         b[half: half + len(flat) - n + 1])
+                codes[n] = c
+                return c
 
-                for n in all_ns:
-                    top_n = np.zeros(len(arrs), dtype=np.int64)
-                    dup_n = np.zeros(len(arrs), dtype=np.int64)
-                    full = W >= n
-                    if full.any() and len(flat) >= n:
-                        c = code_for(n)
-                        p = np.arange(len(flat) - n + 1)
-                        ok = doc_of[p] == doc_of[p + n - 1]
-                        pos = p[ok]
-                        if pos.size:
-                            gdoc = doc_of[pos]
-                            glen = cum[pos + n] - cum[pos] + (n - 1)
-                            key = (gdoc << np.int64(32)) | c[pos]
-                            order = np.argsort(key, kind="stable")
-                            ks = key[order]
-                            gl = glen[order]
-                            gd = gdoc[order]
-                            bound = np.flatnonzero(
-                                np.r_[True, ks[1:] != ks[:-1]]
-                            )
-                            cnt = np.diff(np.r_[bound, len(ks)])
-                            rep_len = gl[bound]
-                            rep_doc = gd[bound]
-                            packed = cnt * _PACK + cnt * rep_len
-                            dupv = np.where(cnt > 1, cnt * rep_len, 0)
-                            dbound = np.flatnonzero(
-                                np.r_[True, rep_doc[1:] != rep_doc[:-1]]
-                            )
-                            tmax = np.maximum.reduceat(packed, dbound)
-                            dsum = np.add.reduceat(dupv, dbound)
-                            present = rep_doc[dbound]
-                            top_n[present] = tmax % _PACK
-                            dup_n[present] = dsum
-                    sub = ~full
-                    if sub.any():
-                        si = np.flatnonzero(sub)
-                        gl = cum[starts[si + 1]] - cum[starts[si]] + W[si] - 1
-                        top_n[si] = (1 * _PACK + gl) % _PACK
-                        dup_n[si] = 0
-                    t = np.full(m, np.nan)
-                    d = np.full(m, np.nan)
-                    t[row_ids] = top_n
-                    d[row_ids] = dup_n
-                    tops[n] = t
-                    dups[n] = d
             for n in all_ns:
-                out[f"top{n}"] = pd.array(
-                    [None if np.isnan(x) else int(x) for x in tops[n]],
-                    dtype="Int64",
-                )
-                out[f"dup{n}"] = pd.array(
-                    [None if np.isnan(x) else int(x) for x in dups[n]],
-                    dtype="Int64",
-                )
-            yield pd.DataFrame(out)
+                top_n = np.zeros(len(arrs), dtype=np.int64)
+                dup_n = np.zeros(len(arrs), dtype=np.int64)
+                full = W >= n
+                if full.any() and len(flat) >= n:
+                    c = code_for(n)
+                    p = np.arange(len(flat) - n + 1)
+                    ok = doc_of[p] == doc_of[p + n - 1]
+                    pos = p[ok]
+                    if pos.size:
+                        gdoc = doc_of[pos]
+                        glen = cum[pos + n] - cum[pos] + (n - 1)
+                        key = (gdoc << np.int64(32)) | c[pos]
+                        order = np.argsort(key, kind="stable")
+                        ks = key[order]
+                        gl = glen[order]
+                        gd = gdoc[order]
+                        bound = np.flatnonzero(
+                            np.r_[True, ks[1:] != ks[:-1]]
+                        )
+                        cnt = np.diff(np.r_[bound, len(ks)])
+                        rep_len = gl[bound]
+                        rep_doc = gd[bound]
+                        packed = cnt * _PACK + cnt * rep_len
+                        dupv = np.where(cnt > 1, cnt * rep_len, 0)
+                        dbound = np.flatnonzero(
+                            np.r_[True, rep_doc[1:] != rep_doc[:-1]]
+                        )
+                        tmax = np.maximum.reduceat(packed, dbound)
+                        dsum = np.add.reduceat(dupv, dbound)
+                        present = rep_doc[dbound]
+                        top_n[present] = tmax % _PACK
+                        dup_n[present] = dsum
+                sub = ~full
+                if sub.any():
+                    si = np.flatnonzero(sub)
+                    gl = cum[starts[si + 1]] - cum[starts[si]] + W[si] - 1
+                    top_n[si] = (1 * _PACK + gl) % _PACK
+                    dup_n[si] = 0
+                tops[n][row_ids] = top_n
+                dups[n][row_ids] = dup_n
+        for n in all_ns:
+            out[f"top{n}"] = tops[n]
+            out[f"dup{n}"] = dups[n]
+        return out
 
     return kernel
 
@@ -297,7 +288,7 @@ def repetition_stats(
             for c in (f"top{n}", f"dup{n}")
         )
     )
-    stats = prepared.mapInPandas(_stats_kernel(all_ns), stats_schema)
+    stats = map_batches(prepared, _stats_kernel(all_ns), stats_schema)
 
     def frac(num: F.Column, den: F.Column) -> F.Column:
         return F.coalesce(

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from ..functions.arrow import apply_groups, map_batches
 from .blocking import top_k_per_group
 
 
@@ -499,7 +500,7 @@ def kmeans_fit(
 
     * **assign** — :func:`ivf_assign`'s worker-side-codebook pandas UDF
       (one ``(batch, dim) @ (dim, k)`` matmul per Arrow batch);
-    * **update** — per-cell PARTIAL sums via ``mapInPandas`` (one
+    * **update** — per-cell PARTIAL sums via ``map_batches`` (one
       ``(cell, count, sum-vector)`` row per cell per batch — the map-side
       combine), finished on the driver.  The driver step touches only
       O(batches · k) tiny rows; a codebook is driver-sized by the IVF
@@ -570,20 +571,15 @@ def kmeans_fit(
                 vec_col, "cell"
             )
 
-            def _partials(batches):
-                for pdf in batches:
-                    sub = pdf[pdf["cell"].notna()]
-                    if len(sub) == 0:
-                        continue
-                    cells, ns, sums = [], [], []
-                    for c, g in sub.groupby("cell"):
-                        mat = np.stack(g[vec_col].to_numpy())
-                        cells.append(int(c))
-                        ns.append(len(g))
-                        sums.append(mat.sum(axis=0).tolist())
-                    yield pd.DataFrame({"cell": cells, "n": ns, "s": sums})
+            def _partials(pdf):
+                cells, ns, sums = [], [], []
+                for c, g in pdf[pdf["cell"].notna()].groupby("cell"):
+                    cells.append(int(c))
+                    ns.append(len(g))
+                    sums.append(np.stack(g[vec_col].to_numpy()).sum(axis=0))
+                return {"cell": cells, "n": ns, "s": sums}
 
-            rows = assigned.mapInPandas(_partials, partial_schema).collect()
+            rows = map_batches(assigned, _partials, partial_schema).collect()
             counts = np.zeros(k, dtype=np.int64)
             sums = np.zeros_like(cb)
             for r in rows:
@@ -632,21 +628,10 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
 
     def kernel(pdf):
         import numpy as np
-        import pandas as pd
 
         n = len(pdf)
-        # ids keep the input column's dtype: a string-id cell must not
-        # emit int64 ids into a string output column
-        no_ids = pdf["doc"].to_numpy()[:0]
-        empty = pd.DataFrame(
-            {
-                "left_id": no_ids,
-                "right_id": no_ids,
-                "cos": pd.array([], dtype="float64"),
-            }
-        )
         if n < 2:
-            return empty
+            return None
         ids_raw = pdf["doc"].to_numpy()
         order = np.argsort(ids_raw, kind="stable")
         ids = ids_raw[order]
@@ -694,14 +679,12 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
                     out_r.append(ids[j0 + jj])
                     out_c.append(cos[ii, jj])
         if not out_l:
-            return empty
-        return pd.DataFrame(
-            {
-                "left_id": np.concatenate(out_l),
-                "right_id": np.concatenate(out_r),
-                "cos": np.concatenate(out_c),
-            }
-        )
+            return None
+        return {
+            "left_id": np.concatenate(out_l),
+            "right_id": np.concatenate(out_r),
+            "cos": np.concatenate(out_c),
+        }
 
     return kernel
 
@@ -759,22 +742,15 @@ def semdedup(
         .filter(F.col("cell").isNotNull())
         .select(F.col(id_col).alias("doc"), F.col(vec_col).alias("_v"), "cell")
     )
-    if max_cell is None:
-        # no cap requested: cap_buckets would still run a cell-size
-        # aggregate + keep join just to drop SINGLETON cells, which the
-        # kernel drops anyway (n < 2 emits nothing) — skip both stages.
-        kept = cells
-        dropped = cells.groupBy("cell").agg(F.count("*").alias("n")).filter(
-            F.lit(False)
-        )
-    else:
-        # _v rides through cap_buckets untouched: the size aggregate reads
-        # only (cell), and the keep join is by cell (AQE-broadcast side)
-        kept, dropped = cap_buckets(cells, ["cell"], max_cell)
+    # _v rides through cap_buckets untouched: the size aggregate reads
+    # only (cell), and the keep join is by cell (AQE-broadcast side)
+    kept, dropped = cap_buckets(cells, ["cell"], max_cell)
     if dropped_sink is not None:
         dropped_sink(dropped)
     id_type = cells.schema["doc"].dataType.simpleString()
-    raw = kept.groupBy("cell").applyInPandas(
+    raw = apply_groups(
+        kept,
+        ["cell"],
         _cell_pair_kernel(threshold),
         f"left_id {id_type}, right_id {id_type}, cos double",
     )

@@ -11,8 +11,8 @@ A stage also records its own numbers while it is written, so auditing it
 costs no job of its own:
 
 * an ``Observation`` on the write counts the rows (plus any aggregates the
-  caller passes) and :func:`stage` stores them, with the stage's schema, in
-  the ``_STAGE_METRICS.json`` sidecar (Spark's parquet reader skips
+  caller passes) and :func:`stage` stores them, with the stage's schema and
+  params fingerprint, in the ``_STAGE_METRICS.json`` sidecar (Spark's parquet reader skips
   ``_``-prefixed files); :func:`stage_metrics` reads them back;
 * :func:`stage_partitions` reads rows per write task from the parquet
   footers of the stage's ``part-NNNNN`` files.
@@ -22,7 +22,7 @@ sidecar is written last, so a run that died between the parquet commit and
 the sidecar rebuilds the stage.  Reading a stored stage with the sidecar's
 schema also skips the schema-inference job ``spark.read.parquet`` launches.
 
-Storage is parquet-with-manifest.  (Iceberg gives the same semantics via
+Storage is parquet plus the sidecar.  (Iceberg gives the same semantics via
 snapshots, but the runtime jar is not available in this sandbox — the
 storage layer is isolated here so swapping `.format("iceberg")` in is a
 one-line change per SURVEY.md §7 risk register.)
@@ -40,7 +40,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-_MANIFEST = "_PARAMS_MANIFEST.json"
 _METRICS = "_STAGE_METRICS.json"
 _PART_FILE = re.compile(r"part-(\d+)-")
 
@@ -55,18 +54,6 @@ def _params_hash(params: dict | None) -> str | None:
     return hashlib.md5(
         json.dumps(params, sort_keys=True, default=str).encode()
     ).hexdigest()
-
-
-def _manifest_matches(path: str, fingerprint: str | None) -> bool:
-    """A stage output is reusable when its recorded parameter fingerprint
-    matches (or no fingerprint is in play — legacy / un-parameterised)."""
-    if fingerprint is None:
-        return True
-    manifest = os.path.join(path, _MANIFEST)
-    if not os.path.exists(manifest):
-        return False
-    with open(manifest) as f:
-        return json.load(f).get("params_hash") == fingerprint
 
 
 def _read_record(path: str) -> dict:
@@ -106,10 +93,13 @@ def stage(
     the tests/small-runs contract of the ``run_dir=None`` path (durable
     runs pass ``run_dir`` and get parquet stages).
 
-    ``params`` fingerprints the stage's parameterisation: re-running the
-    same ``run_dir`` with different parameters rebuilds the stage instead of
-    silently reusing stale output (the ``_SUCCESS`` marker alone can't tell
-    a max_block_size=50 run from a max_block_size=500 one).
+    ``params`` fingerprints the stage's parameterisation, recorded in the
+    sidecar: re-running the same ``run_dir`` with different parameters
+    rebuilds the stage instead of silently reusing stale output (the
+    ``_SUCCESS`` marker alone can't tell a max_block_size=50 run from a
+    max_block_size=500 one).  The caller includes every parameter its
+    inputs were built with — the upstream stages' params — so a change
+    rebuilds every stage downstream of it.
 
     ``observe`` names extra aggregates (``{"no_match": F.count_if(...)}``)
     evaluated by the write itself, next to the ``rows`` count every durable
@@ -125,7 +115,7 @@ def stage(
     record = _read_record(path) if _done(path) else None
     if not (
         record
-        and _manifest_matches(path, fingerprint)
+        and record.get("params_hash") == fingerprint
         and set(observe) <= set(record["metrics"])
     ):
         frame = build()
@@ -134,10 +124,11 @@ def stage(
         frame.observe(obs, *[c.alias(k) for k, c in aggs.items()]).write.mode(
             "overwrite"
         ).parquet(path)
-        if fingerprint is not None:
-            with open(os.path.join(path, _MANIFEST), "w") as f:
-                json.dump({"params_hash": fingerprint, "params": params}, f, default=str)
-        record = {"metrics": obs.get, "schema": frame.schema.jsonValue()}
+        record = {
+            "metrics": obs.get,
+            "schema": frame.schema.jsonValue(),
+            "params_hash": fingerprint,
+        }
         _write_record(path, record)
     # the recorded schema spares the schema-inference job of a plain read
     return spark.read.schema(StructType.fromJson(record["schema"])).parquet(path)

@@ -448,12 +448,15 @@ def run_pipeline(
     entities = stage(spark, run_dir, "entities", lambda: extract_entities(transcripts))
     append_partition_rows(run_dir, run_id, "entities")
 
+    # a stage's params are its upstream stage's params plus its own, so a
+    # changed parameter rebuilds every stage downstream of where it acts
+    block_params = {"max_block_size": max_block_size}
     blocks = stage(
         spark,
         run_dir,
         "blocks",
         lambda: build_blocks(entities, "conv_id", "tokens", max_block_size),
-        params={"max_block_size": max_block_size},
+        params=block_params,
     )
     append_audit(block_skew_metrics(blocks, run_id), run_dir, "blocks")
 
@@ -500,26 +503,19 @@ def run_pipeline(
             )
         return p
 
-    pairs = stage(
-        spark,
-        run_dir,
-        "pairs",
-        _pairs,
-        params={
-            "salt": salt,
-            "max_block_size": max_block_size,
-            "snm_window": snm_window,
-            "cnp_k": cnp_k,
-        },
-    )
+    pair_params = {
+        **block_params, "salt": salt, "snm_window": snm_window, "cnp_k": cnp_k
+    }
+    pairs = stage(spark, run_dir, "pairs", _pairs, params=pair_params)
     append_partition_rows(run_dir, run_id, "pairs")
 
+    edge_params = {**pair_params, "endings": endings}
     edges = stage(
         spark,
         run_dir,
         "edges",
         lambda: score_pairs(pairs, entities, endings),
-        params={"endings": endings, "salt": salt, "max_block_size": max_block_size},
+        params=edge_params,
         observe=score_observations(),
     )
     append_partition_rows(run_dir, run_id, "edges")
@@ -538,7 +534,9 @@ def run_pipeline(
             )
         )
 
-    components = stage(spark, run_dir, "components", _components)
+    components = stage(
+        spark, run_dir, "components", _components, params=edge_params
+    )
     append_partition_rows(run_dir, run_id, "components")
 
     out = {
@@ -603,10 +601,9 @@ def run_pipeline(
             "fs_pairs",
             _fs,
             params={
+                **pair_params,
                 "fs_bands": fs_bands,
                 "fs_thresholds": list(fs_thresholds),
-                "cnp_k": cnp_k,
-                "snm_window": snm_window,
             },
         )
 

@@ -24,7 +24,7 @@ Parsing strategy, per payload family:
   .value`` is a string for P373/P18/P1216, a monolingual struct for
   P1448/P1705, an entity-id struct for P31, a coordinate struct for P625.
   ``from_json`` forces one type per path and silently nulls the others, so
-  entity splitting runs in an Arrow-batched ``mapInPandas`` (one
+  entity splitting runs as an Arrow-batch kernel (``map_batches``: one
   ``json.loads`` per payload, linear, no collect) that emits the raw
   per-entity JSON (for the F2 name-assembly UDF) plus the typed columns
   the match operators key on.
@@ -33,9 +33,10 @@ Parsing strategy, per payload family:
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..functions.arrow import map_batches
 
 # ---------------------------------------------------------------- S8
 
@@ -55,71 +56,64 @@ def _claim_values(entity: dict, pid: str) -> list:
     return out
 
 
-def _entity_rows(payloads: Iterator) -> Iterator:
-    """mapInPandas kernel: wbgetentities payload string -> entity rows."""
+def _entity_rows(pdf):
+    """Batch kernel: wbgetentities payload strings -> entity rows."""
     import pandas as pd
 
-    for pdf in payloads:
-        rows = []
-        for blob in pdf["payload"]:
-            if not blob:
-                continue
-            reply = json.loads(blob)
-            # a bare cached entity file (wikidata_api.py:231-238) has no
-            # "entities" wrapper: treat the document itself as one entity
-            entities = reply.get("entities") or (
-                {reply["id"]: reply} if "id" in reply else {}
-            )
-            for qid, entity in entities.items():
-                missing = "missing" in entity
-                p31 = [
-                    v.get("id")
-                    for v in _claim_values(entity, "P31")
-                    if isinstance(v, dict)
-                ]
-                p625 = next(
-                    (
-                        v
-                        for v in _claim_values(entity, "P625")
-                        if isinstance(v, dict)
-                    ),
-                    None,
-                )
-                p6375 = next(
-                    (
-                        v.get("text")
-                        for v in _claim_values(entity, "P6375")
-                        if isinstance(v, dict)
-                    ),
-                    None,
-                )
-                labels = entity.get("labels") or {}
-                rows.append(
-                    {
-                        "qid": qid,
-                        "missing": missing,
-                        "entity_json": None if missing else json.dumps(entity),
-                        "label_en": (labels.get("en") or {}).get("value"),
-                        "instanceof": p31,
-                        # P1216 = National Heritage List for England number;
-                        # the reference checks bare claim-KEY presence
-                        # ('"P1216" in entity["claims"]', model.py:1116-1118)
-                        # — a novalue/somevalue snak still counts — and the
-                        # flag drives the NHLE distance guard
-                        # (matcher.py:824-825)
-                        "is_nhle": "P1216" in (entity.get("claims") or {}),
-                        "street_address": p6375,
-                        "lat": (p625 or {}).get("latitude"),
-                        "lon": (p625 or {}).get("longitude"),
-                    }
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "qid", "missing", "entity_json", "label_en", "instanceof",
-                "is_nhle", "street_address", "lat", "lon",
-            ],
+    rows = []
+    for blob in pdf["payload"]:
+        if not blob:
+            continue
+        reply = json.loads(blob)
+        # a bare cached entity file (wikidata_api.py:231-238) has no
+        # "entities" wrapper: treat the document itself as one entity
+        entities = reply.get("entities") or (
+            {reply["id"]: reply} if "id" in reply else {}
         )
+        for qid, entity in entities.items():
+            missing = "missing" in entity
+            p31 = [
+                v.get("id")
+                for v in _claim_values(entity, "P31")
+                if isinstance(v, dict)
+            ]
+            p625 = next(
+                (
+                    v
+                    for v in _claim_values(entity, "P625")
+                    if isinstance(v, dict)
+                ),
+                None,
+            )
+            p6375 = next(
+                (
+                    v.get("text")
+                    for v in _claim_values(entity, "P6375")
+                    if isinstance(v, dict)
+                ),
+                None,
+            )
+            labels = entity.get("labels") or {}
+            rows.append(
+                {
+                    "qid": qid,
+                    "missing": missing,
+                    "entity_json": None if missing else json.dumps(entity),
+                    "label_en": (labels.get("en") or {}).get("value"),
+                    "instanceof": p31,
+                    # P1216 = National Heritage List for England number;
+                    # the reference checks bare claim-KEY presence
+                    # ('"P1216" in entity["claims"]', model.py:1116-1118)
+                    # — a novalue/somevalue snak still counts — and the
+                    # flag drives the NHLE distance guard
+                    # (matcher.py:824-825)
+                    "is_nhle": "P1216" in (entity.get("claims") or {}),
+                    "street_address": p6375,
+                    "lat": (p625 or {}).get("latitude"),
+                    "lon": (p625 or {}).get("longitude"),
+                }
+            )
+    return pd.DataFrame(rows) if rows else None
 
 
 def parse_wbgetentities(payloads: DataFrame, col: str = "payload") -> DataFrame:
@@ -131,7 +125,7 @@ def parse_wbgetentities(payloads: DataFrame, col: str = "payload") -> DataFrame:
     :func:`..functions.udfs.names_from_entity_udf` (F2) unchanged.
     """
     src = payloads.select(F.col(col).alias("payload"))
-    return src.mapInPandas(_entity_rows, schema=ENTITY_ROW_SCHEMA)
+    return map_batches(src, _entity_rows, ENTITY_ROW_SCHEMA)
 
 
 def read_wbgetentities_dir(spark: SparkSession, path: str) -> DataFrame:

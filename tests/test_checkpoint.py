@@ -1,5 +1,5 @@
 """Stage-checkpoint semantics: resume on same params, rebuild on changed
-params (the _PARAMS_MANIFEST fingerprint added after ADVICE r1)."""
+params (the params fingerprint recorded in the stage sidecar)."""
 
 from __future__ import annotations
 

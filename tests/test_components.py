@@ -156,25 +156,6 @@ def test_components_at_thresholds_rejects_empty(spark):
         components_at_thresholds(edges, [])
 
 
-def test_checkpoint_off_on_converged_star_forest(spark):
-    """checkpoint=False is documented as safe ONLY for ~1-round graphs
-    (the uncut star passes grow the plan exponentially per round): pin
-    it on its safe shape — an already-canonical star forest, where it
-    must equal the checkpointed result.  Multi-round graphs under
-    checkpoint=False are a documented planning hazard, not a supported
-    path (components.py docstring)."""
-    edges = [("a0", f"a{i}") for i in range(1, 6)] + [
-        ("b0", f"b{i}") for i in range(1, 4)
-    ]
-    df = spark.createDataFrame(edges, "left_id string, right_id string")
-    on = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    off = {
-        r["node"]: r["component"]
-        for r in connected_components(df, checkpoint=False).collect()
-    }
-    assert on == off and on == _union_find(edges)
-
-
 def test_max_iterations_exhausted_raises(spark):
     """Labels read off an unconverged edge set split components, so
     running out of rounds fails loudly instead of returning them."""

@@ -1681,6 +1681,7 @@ def test_semdedup_kernel_matches_join_fold_shape(spark):
     same column expressions."""
     import random
 
+    from osm_wikidata_spark.functions.arrow import apply_groups
     from osm_wikidata_spark.operators.similarity import (
         _norm_cosine,
         ivf_assign,
@@ -1734,11 +1735,11 @@ def test_semdedup_kernel_matches_join_fold_shape(spark):
         .filter(F.col("cos") >= threshold)
     )
     kernel_pairs = (
-        ivf_assign(vecs, cents)
-        .filter(F.col("cell").isNotNull())
-        .select(F.col("vec_id").alias("doc"), F.col("embedding").alias("_v"), "cell")
-        .groupBy("cell")
-        .applyInPandas(
+        apply_groups(
+            ivf_assign(vecs, cents)
+            .filter(F.col("cell").isNotNull())
+            .select(F.col("vec_id").alias("doc"), F.col("embedding").alias("_v"), "cell"),
+            ["cell"],
             similarity._cell_pair_kernel(threshold),
             "left_id long, right_id long, cos double",
         )
@@ -1752,11 +1753,11 @@ def test_semdedup_kernel_matches_join_fold_shape(spark):
     # tile-boundary pin: a 3-wide tile must tile-split this cell several
     # times and still emit the identical pair set
     tiled = (
-        ivf_assign(vecs, cents)
-        .filter(F.col("cell").isNotNull())
-        .select(F.col("vec_id").alias("doc"), F.col("embedding").alias("_v"), "cell")
-        .groupBy("cell")
-        .applyInPandas(
+        apply_groups(
+            ivf_assign(vecs, cents)
+            .filter(F.col("cell").isNotNull())
+            .select(F.col("vec_id").alias("doc"), F.col("embedding").alias("_v"), "cell"),
+            ["cell"],
             similarity._cell_pair_kernel(threshold, block=3),
             "left_id long, right_id long, cos double",
         )

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_wikidata_spark.plans.checkpoint import completed_stages
@@ -184,6 +186,55 @@ def test_resume_after_crash_before_metrics_sidecar(spark, tmp_path):
     assert os.path.getmtime(success) == pairs_mtime  # pairs reused
     assert sorted(second["edges"].collect()) == edges
     assert sorted(second["components"].collect()) == components
+
+
+_FS_BANDS = {"jaro_winkler": [0.85, 0.95], "token_overlap": [0.4, 0.9]}
+
+
+@pytest.fixture(scope="module")
+def finished_run(spark, tmp_path_factory):
+    """One finished durable run with every stage, fs_pairs included."""
+    transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
+    run_dir = str(tmp_path_factory.mktemp("finished") / "run")
+    run_pipeline(spark, transcripts, run_dir=run_dir, run_id="base", fs_bands=_FS_BANDS)
+    return transcripts, run_dir
+
+
+def _stage_rows(df) -> list[str]:
+    # fs posteriors come from an EM fit whose float sums follow partition
+    # order, so they are compared to 9 decimals
+    return sorted(
+        repr(tuple(round(v, 9) if isinstance(v, float) else v for v in r))
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "param, value",
+    [
+        ("endings", ["hall", "village"]),
+        ("max_block_size", 2),
+        ("salt", 3),
+        ("snm_window", 3),
+        ("cnp_k", 1),
+        ("fs_bands", {"jaro_winkler": [0.9]}),
+        ("fs_thresholds", (-2.0, 2.0)),
+    ],
+)
+def test_resume_after_param_change_equals_fresh_run(
+    spark, tmp_path, finished_run, param, value
+):
+    """A changed parameter rebuilds every stage downstream of where it
+    acts: resuming a finished run_dir under the new value gives what a
+    fresh run gives, on every stage."""
+    transcripts, finished = finished_run
+    run_dir = str(tmp_path / "run")
+    shutil.copytree(finished, run_dir)
+    kwargs = {"fs_bands": _FS_BANDS, param: value}
+    resumed = run_pipeline(spark, transcripts, run_dir=run_dir, run_id="r2", **kwargs)
+    fresh = run_pipeline(spark, transcripts, **kwargs)
+    for name, frame in fresh.items():
+        assert _stage_rows(resumed[name]) == _stage_rows(frame), name
 
 
 def test_audit_written(spark, tmp_path):
