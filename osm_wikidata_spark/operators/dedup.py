@@ -151,11 +151,12 @@ def near_dup_clusters(
     an edge.
 
     Scale shape: the edge set is already bounded by the pair generator's
-    bucket caps; CC is O(log^2 n) shuffle rounds on (u, v) longs; the
-    cluster_size window is one extra shuffle on the component key and
-    stays columnar (no per-cluster arrays), so a degenerate
-    10^8-member boilerplate cluster costs one skewed-but-scalar partition,
-    not a multi-GB array row.
+    bucket caps; CC labels up to ``components.LOCAL_EDGES`` edges in one
+    union-find task, and above that takes O(log^2 n) shuffle rounds on
+    (u, v) longs; the cluster_size window is one extra shuffle on the
+    component key and stays columnar (no per-cluster arrays), so a
+    degenerate 10^8-member boilerplate cluster costs one
+    skewed-but-scalar partition, not a multi-GB array row.
     """
     from pyspark.sql.window import Window
 
@@ -267,7 +268,15 @@ def minhash_band_keys(
     # xxhash64(null) = the seed hash), silently bucketing all null docs
     # together — and an identical-set group is exactly the shape no
     # downstream filter can prune (k docs → k² candidate pairs at scale)
-    docs = docs.filter(F.col(text_col).isNotNull())
+    # A null id is no document either: it can never pair (the self-join's
+    # ``left_id < right_id`` drops it), so it must not count toward a
+    # bucket's size.  Filtering it HERE also keeps the two band-key
+    # subtrees of minhash_lsh_pairs identical (the self-join infers
+    # ``isnotnull(doc)`` for its own side only), so their doc shuffle runs
+    # once, as a reused exchange: two copies running side by side let
+    # whichever finished first pick AQE's broadcast side, and with it the
+    # job count.
+    docs = docs.filter(F.col(text_col).isNotNull() & F.col(id_col).isNotNull())
     # flat explode + groupBy(min×n) instead of nested array expressions:
     # keeps the per-row expression tree small so whole-stage codegen holds,
     # and the mins combine map-side (the shape simhash_table used before

@@ -12,6 +12,7 @@ Stages (each checkpointable, each audited):
         │                        │ name cross-product → pandas-UDF cascade
         │                        ▼
         │                    edges (matched pairs, kind, rule)
+        │                        │ union-find (≤ 2^20 edges) or
         │                        │ large-star/small-star
         │                        ▼
         └──────────────────► components (conv_id, component)
@@ -197,13 +198,16 @@ def score_pairs(
     unique, where the dedup would be pure overhead; the in-batch memo still
     catches local repeats.
 
-    The trim set per pair = GLOBAL_ENDINGS (or the ``endings`` override)
-    ∪ both sides' per-entity ``endings`` — mirroring the reference's
-    per-item endings derivation (matcher.py:641-656) while keeping the pair
-    decision a pure function of its own row.
+    The trim set per pair = GLOBAL_ENDINGS (or the ``endings`` override;
+    ``[]`` trims no global ending) ∪ both sides' per-entity ``endings`` —
+    mirroring the reference's per-item endings derivation
+    (matcher.py:641-656) while keeping the pair decision a pure function
+    of its own row.
     """
     sep = "\x1f"
-    global_endings = F.array(*[F.lit(e) for e in (endings or GLOBAL_ENDINGS)])
+    global_endings = F.array(
+        *[F.lit(e) for e in (GLOBAL_ENDINGS if endings is None else endings)]
+    ).cast("array<string>")
     empty = F.array().cast("array<string>")
     # null array values coalesce to empty HERE so the fingerprint below
     # cannot alias distinct shapes (concat_ws silently skips nulls:

@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from osm_wikidata_spark.operators import components
 from osm_wikidata_spark.operators.components import connected_components
 from tests.jobcount import jobs_in_group
 
@@ -156,9 +157,10 @@ def test_components_at_thresholds_rejects_empty(spark):
         components_at_thresholds(edges, [])
 
 
-def test_max_iterations_exhausted_raises(spark):
+def test_max_iterations_exhausted_raises(spark, monkeypatch):
     """Labels read off an unconverged edge set split components, so
     running out of rounds fails loudly instead of returning them."""
+    monkeypatch.setattr(components, "LOCAL_EDGES", 0)
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(39)]
     df = spark.createDataFrame(edges, "left_id string, right_id string")
     with pytest.raises(RuntimeError, match="max_iterations=1"):
@@ -199,10 +201,43 @@ def test_id_types_and_degenerate_inputs(spark, id_type, case):
     assert got == _oracle(edges)
 
 
-def test_chain_probe_job_count(spark):
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+def test_id_types_and_degenerate_inputs_distributed(spark, monkeypatch, id_type, case):
+    """The same matrix on the star loop (the default bound sends it all
+    down the local path); -1 sends even the empty edge set through the
+    loop."""
+    monkeypatch.setattr(components, "LOCAL_EDGES", -1)
+    test_id_types_and_degenerate_inputs(spark, id_type, case)
+
+
+@pytest.mark.parametrize(
+    "local_edges", [components.LOCAL_EDGES, -1], ids=["local", "distributed"]
+)
+def test_string_ids_order_as_spark_does(spark, monkeypatch, local_edges):
+    """Component minima of string ids follow Spark's UTF-8 byte order,
+    which is code-point order: "\\uffff" < "\\U00010000" (UTF-16 would
+    invert them), "z" < "é" and "a" < "a\\x00" (a C-string hash would
+    merge those two)."""
+    monkeypatch.setattr(components, "LOCAL_EDGES", local_edges)
+    edges = [
+        ("\U00010000", "\uffff"),
+        ("é", "z"),
+        ("a\x00", "a"),
+        ("\U00010000", "é"),
+        ("x", "a\x00"),
+        ("ÿ", "\x7f"),
+    ]
+    df = spark.createDataFrame(edges, "left_id string, right_id string")
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert got == _oracle(edges)
+
+
+def test_chain_probe_job_count(spark, monkeypatch):
     """The chain probe (1,499 nodes, every 10th link cut) costs one job
     per exchange and one checkpoint job per materialised edge set, whose
     signature rides on the checkpoint: 24 jobs."""
+    monkeypatch.setattr(components, "LOCAL_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 1499) if (i + 1) % 10 != 0],
         "left_id bigint, right_id bigint",
@@ -215,6 +250,24 @@ def test_chain_probe_job_count(spark):
         got["labels"] = labels
 
     assert jobs_in_group(spark, "cc-chain-probe", run) <= 24
+    assert got["labels"].select("component").distinct().count() == 150
+
+
+def test_chain_probe_job_count_local(spark):
+    """On the local path the chain probe costs the canonical input's
+    exchange and checkpoint, then the one-group exchange and the noop
+    write that runs the union-find task: 4 jobs, with no rounds."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 1499) if (i + 1) % 10 != 0],
+        "left_id bigint, right_id bigint",
+    )
+    got = {}
+
+    def run():
+        got["labels"] = connected_components(edges)
+        got["labels"].write.format("noop").mode("overwrite").save()
+
+    assert jobs_in_group(spark, "cc-chain-probe-local", run) <= 4
     assert got["labels"].select("component").distinct().count() == 150
 
 
@@ -239,6 +292,7 @@ def test_pipeline_components_stage_job_count(spark, tmp_path, monkeypatch):
     from osm_wikidata_spark.plans import pipeline
     from osm_wikidata_spark.sources.transcripts import synth_transcripts
 
+    monkeypatch.setattr(components, "LOCAL_EDGES", 0)
     real_stage = pipeline.stage
     jobs = {}
 
@@ -255,3 +309,30 @@ def test_pipeline_components_stage_job_count(spark, tmp_path, monkeypatch):
     transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
     pipeline.run_pipeline(spark, transcripts, run_dir=str(tmp_path / "run"), run_id="jobs")
     assert jobs["components"] <= 9
+
+
+def test_pipeline_components_stage_job_count_local(spark, tmp_path, monkeypatch):
+    """On the local path the same stage costs 2 jobs for the canonical
+    input, then the one-group exchange that runs the union-find task, the
+    singleton join and the write: 5 jobs."""
+    from osm_wikidata_spark.plans import pipeline
+    from osm_wikidata_spark.sources.transcripts import synth_transcripts
+
+    real_stage = pipeline.stage
+    jobs = {}
+
+    def counted_stage(spark_, run_dir, name, build, **kw):
+        if name != "components":
+            return real_stage(spark_, run_dir, name, build, **kw)
+        out = {}
+        jobs[name] = jobs_in_group(
+            spark_,
+            "pipeline-stage-components-local",
+            lambda: out.setdefault("df", real_stage(spark_, run_dir, name, build, **kw)),
+        )
+        return out["df"]
+
+    monkeypatch.setattr(pipeline, "stage", counted_stage)
+    transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
+    pipeline.run_pipeline(spark, transcripts, run_dir=str(tmp_path / "run"), run_id="jobs")
+    assert jobs["components"] <= 5

@@ -323,6 +323,28 @@ def test_ctx_fp_null_vs_empty_no_alias(spark):
     assert len(rows) == 1 and rows[0]["matched"] is True
 
 
+def test_empty_endings_turn_the_global_endings_off(spark):
+    """``endings=[]`` trims nothing, where ``None`` trims GLOBAL_ENDINGS:
+    a pair that matches only because "mall" and "center" are trimmed
+    splits, so the two values give different edges, as their different
+    stage fingerprints say they do."""
+    from osm_wikidata_spark.plans.pipeline import score_pairs
+
+    entities = spark.createDataFrame(
+        [
+            ("a", ["Oxmoor Mall"], [], [], False),
+            ("b", ["Oxmoor Center"], [], [], False),
+        ],
+        "conv_id string, names array<string>, endings array<string>, "
+        "place_names array<string>, is_hamlet boolean",
+    ).cache()
+    pairs = spark.createDataFrame(
+        [("a", "b", "k")], "left_id string, right_id string, block_key string"
+    )
+    assert [r["matched"] for r in score_pairs(pairs, entities).collect()] == [True]
+    assert [r["matched"] for r in score_pairs(pairs, entities, []).collect()] == [False]
+
+
 def test_pipeline_cnp_budget_reduction_at_unchanged_f1(spark):
     """Opt-in meta-blocking CNP: the scored-pair budget strictly shrinks
     (pairs is a strict subset of the default run's) while pairwise F1

@@ -124,6 +124,38 @@ def test_minhash_keep_join_not_forced_broadcast(spark):
     assert "strategy=broadcast" not in optimized
 
 
+def test_minhash_band_keys_shuffle_runs_once(spark):
+    """The bucket-size count and the keep join read ONE doc-keyed shuffle
+    of the band keys: the second is a reused exchange, so the plan AQE
+    finishes with no longer depends on which copy completes first."""
+    from osm_wikidata_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d e"), (3, "x y z w v")],
+        "doc_id bigint, text string",
+    )
+    pairs = dedup.minhash_lsh_pairs(docs)
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    nodes = [line.lstrip(" :+-") for line in final]
+    assert sum(n.startswith("Exchange hashpartitioning(doc") for n in nodes) == 1
+    assert any(n.startswith("ReusedExchange [doc") for n in nodes)
+
+
+def test_minhash_null_ids_do_not_count_toward_bucket_size(spark):
+    """A null-id document never pairs, so it does not push a bucket over
+    ``max_bucket`` either."""
+    from osm_wikidata_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d e"), (None, "a b c d e")],
+        "doc_id bigint, text string",
+    )
+    pairs = dedup.minhash_lsh_pairs(docs, max_bucket=2).collect()
+    assert [(r["left_id"], r["right_id"]) for r in pairs] == [(1, 2)]
+
+
 def test_simhash_keep_join_not_forced_broadcast(spark):
     """Same invariant for the SimHash combo-key path."""
     from osm_wikidata_spark.operators import dedup
