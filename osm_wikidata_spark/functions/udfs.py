@@ -11,6 +11,7 @@ cache (`/root/reference/matcher/match.py:1029-1048`), but batch-wide.
 from __future__ import annotations
 
 import json
+import re
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -250,6 +251,21 @@ def tidy_name_udf(names: pd.Series) -> pd.Series:
     return _memoised(names.fillna(""), lambda v: tidy_name(v.lower()))
 
 
+_SPLIT_NON_ALNUM = re.compile(r"[^0-9a-z]+")
+
+
+def _block_tokens(value: str) -> list[str]:
+    """N10 for one name: its distinct normalised tokens, sorted."""
+    if not value:
+        return []
+    tokens = [
+        tok
+        for tok in _SPLIT_NON_ALNUM.split(tidy_name(value.lower()))
+        if len(tok) >= 2 and tok not in BLOCK_STOPWORDS
+    ]
+    return sorted(set(tokens))
+
+
 @F.pandas_udf(ArrayType(StringType()))
 def block_tokens_udf(names: pd.Series) -> pd.Series:
     """N10 blocking normaliser: name -> distinct normalised tokens.
@@ -258,22 +274,24 @@ def block_tokens_udf(names: pd.Series) -> pd.Series:
     The token set is the graft's replacement for the reference's spatial
     blocking predicate (ST_DWithin, matcher.py:297-306).
     """
+    return _memoised(names.fillna(""), _block_tokens)
 
-    import re
 
-    split_non_alnum = re.compile(r"[^0-9a-z]+")
+@F.pandas_udf(ArrayType(StringType()))
+def block_tokens_array_udf(names: pd.Series) -> pd.Series:
+    """:func:`block_tokens_udf` over a names array: the sorted union of
+    every name's tokens, each distinct name tokenised once per batch."""
+    memo: dict[str, list[str]] = {}
 
-    def _tokens(value: str) -> list[str]:
-        if not value:
-            return []
-        tokens = [
-            tok
-            for tok in split_non_alnum.split(tidy_name(value.lower()))
-            if len(tok) >= 2 and tok not in BLOCK_STOPWORDS
-        ]
-        return sorted(set(tokens))
+    def _union(row) -> list[str]:
+        out: set[str] = set()
+        for name in row:
+            if name not in memo:
+                memo[name] = _block_tokens(name)
+            out.update(memo[name])
+        return sorted(out)
 
-    return _memoised(names.fillna(""), _tokens)
+    return pd.Series([_union(row) for row in names])
 
 
 NAMES_ENTRY_SCHEMA = ArrayType(

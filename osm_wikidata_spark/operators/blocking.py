@@ -11,19 +11,34 @@ in order:
 1. **block-size cap** — blocks larger than ``max_block_size`` on either side
    are dropped (with audit counts); a token shared by 10^6 records carries no
    discriminative signal, exactly like the reference's skip_tags
-   (place.py:70-85).  The broadcast side is the *hot* key list — small by
+   (place.py:70-85).  The anti-joined side is the *hot* key list — small by
    construction (``Σ block_n > cap·|hot|`` bounds it at corpus/cap keys) —
    never the keep set, which at 10^12 turns is nearly every distinct token.
+   The one aggregate that finds the hot keys also summarises the kept
+   block sizes, so the skew audit and the salted join read that summary
+   instead of re-aggregating; with no hot key the cap joins nothing.
 2. **salted join** — two-path: only keys whose pair product exceeds
    ``hot_threshold`` are salted (probe side split into ``salt`` sub-keys,
    build side exploded ``salt``-fold); the cold 99% of keys join unsalted,
-   paying no explode/shuffle amplification (north_rule requirement).
+   paying no explode/shuffle amplification (north_rule requirement).  A
+   caller that knows the largest block (``max_block``) and so knows no key
+   can be hot gets the plain join, with no size aggregate or hot list.
 3. **AQE skew-join** stays on as the runtime backstop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+BLOCK_SUMMARY = ("n_blocks", "max_block", "avg_block", "p50_block", "p99_block")
+
+
+def _block_index(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("block_id"),
+        F.explode(F.col(tokens_col)).alias("block_key"),
+    ).dropDuplicates(["block_id", "block_key"])
 
 
 def build_blocks(
@@ -34,20 +49,61 @@ def build_blocks(
 ) -> DataFrame:
     """Explode a token-array column into an inverted (block_key, id) index.
 
-    With ``max_block_size``, hot keys are removed *before* the join via a
-    broadcast **anti**-join against the (small) hot-key list.  Broadcasting
-    the complement — all keys at or under the cap — would ship nearly the
-    whole token vocabulary to every executor at scale.
+    With ``max_block_size``, hot keys are removed *before* the join via an
+    **anti**-join against the (small) hot-key list; see
+    :func:`capped_blocks`.  Without it the index is returned lazily.
     """
-    blocks = df.select(
-        F.col(id_col).alias("block_id"),
-        F.explode(F.col(tokens_col)).alias("block_key"),
-    ).dropDuplicates(["block_id", "block_key"])
-    if max_block_size is not None:
-        sizes = blocks.groupBy("block_key").agg(F.count("*").alias("block_n"))
-        hot = sizes.filter(F.col("block_n") > max_block_size).select("block_key")
-        blocks = blocks.join(F.broadcast(hot), "block_key", "left_anti")
-    return blocks
+    if max_block_size is None:
+        return _block_index(df, id_col, tokens_col)
+    return capped_blocks(df, id_col, tokens_col, max_block_size)[0]
+
+
+def capped_blocks(
+    df: DataFrame,
+    id_col: str,
+    tokens_col: str,
+    max_block_size: int | None,
+) -> tuple[DataFrame, dict]:
+    """:func:`build_blocks` plus the size summary of the keys it keeps.
+
+    One driver-side aggregate over the per-key sizes returns both the hot
+    keys (``block_n > max_block_size``) and the ``BLOCK_SUMMARY`` of the
+    kept ones: ``n_blocks``, ``max_block``, ``avg_block``, ``p50_block``
+    and ``p99_block``, the values ``plans.audit.block_skew_metrics``
+    computes over the capped index.  Only a non-empty hot list is
+    anti-joined, as a broadcast local relation: the driver collects
+    exactly the keys a broadcast of the hot list would, and never the
+    keep set, which at 10^12 turns is nearly every distinct token.
+    """
+    blocks = _block_index(df, id_col, tokens_col)
+    n = F.col("block_n")
+    if max_block_size is None:
+        kept, hot = n, F.lit(None)
+    else:
+        kept = F.when(n <= max_block_size, n)
+        hot = F.when(n > max_block_size, F.col("block_key"))
+    row = (
+        block_size_stats(blocks)
+        .agg(
+            F.collect_list(hot).alias("hot"),
+            F.count(kept).alias("n_blocks"),
+            F.max(kept).alias("max_block"),
+            F.avg(kept).alias("avg_block"),
+            F.percentile_approx(kept, 0.5).alias("p50_block"),
+            F.percentile_approx(kept, 0.99).alias("p99_block"),
+        )
+        .first()
+    )
+    if row["hot"]:
+        hot_keys = blocks.sparkSession.createDataFrame(
+            [(k,) for k in row["hot"]], StructType([blocks.schema["block_key"]])
+        )
+        blocks = blocks.join(F.broadcast(hot_keys), "block_key", "left_anti")
+    elif max_block_size is not None:
+        # the column order the anti-join gives, so a stored index has one
+        # schema whether or not a key was hot
+        blocks = blocks.select("block_key", "block_id")
+    return blocks, {k: row[k] for k in BLOCK_SUMMARY}
 
 
 def block_size_stats(blocks: DataFrame) -> DataFrame:
@@ -126,6 +182,7 @@ def salted_pair_join(
     right_blocks: DataFrame,
     salt: int = 8,
     hot_threshold: int = 65536,
+    max_block: int | None = None,
 ) -> DataFrame:
     """Join two (block_key, block_id) indexes into candidate pairs.
 
@@ -140,9 +197,16 @@ def salted_pair_join(
     Measured balance evidence: scripts/skew_bench.py + BENCH.md (largest
     join-stage task's share of the pair volume, salted vs not).
 
+    ``max_block``, when given, bounds every key's row count on both sides
+    (``capped_blocks`` records it).  With ``max_block² ≤ hot_threshold`` no
+    key can be hot, so the join takes the unsalted ``salt ≤ 1`` shape and
+    spends no job proving it.
+
     Dedups (left_id, right_id) pairs that co-occur in several blocks,
     keeping the lexicographically-smallest key for lineage.
     """
+    if max_block is not None and float(max_block) ** 2 <= hot_threshold:
+        salt = 1
     return (
         _candidate_pairs_raw(left_blocks, right_blocks, salt, hot_threshold)
         .groupBy("left_id", "right_id")

@@ -14,13 +14,15 @@ writes a stage:
   footers (:func:`append_partition_rows`);
 * ``scores`` rows: the decision-kind histogram, observed on the edges
   write (:func:`score_observations`, :func:`append_score_rows`);
-* ``blocks`` rows: the one audit that still runs its own aggregate
-  (:func:`block_skew_metrics`, three jobs), since it needs per-key sizes.
+* ``blocks`` rows: the block-size summary the blocks stage's own cap
+  aggregate returned (``operators.blocking.capped_blocks``), kept in the
+  stage's sidecar (:func:`append_block_rows`).
 
-Both in-process appends write one pyarrow ``part-<uuid>.parquet`` file
-per call, with the column names and types the Spark-side helpers below
-write, so a table mixing both kinds of file reads with one schema.  The
-Spark-side helpers stay for callers that audit a frame of their own
+So the audit launches no Spark job, and a resume over finished stages
+launches none.  Every append writes one pyarrow ``part-<uuid>.parquet``
+file per call, with the column names and types the Spark-side helpers
+below write, so a table mixing both kinds of file reads with one schema.
+The Spark-side helpers stay for callers that audit a frame of their own
 (``dropped_sink`` users, the benchmark's traced run).
 """
 
@@ -41,6 +43,11 @@ _TS = pa.timestamp("us", tz="UTC")  # what Spark writes for TimestampType
 _PARTITIONS = pa.schema(
     [("run_id", pa.string()), ("stage", pa.string()), ("partition_id", pa.int32()),
      ("rows", pa.int64()), ("ts", _TS)]
+)
+_BLOCKS = pa.schema(
+    [("run_id", pa.string()), ("stage", pa.string()), ("n_blocks", pa.int64()),
+     ("max_block", pa.int64()), ("avg_block", pa.float64()), ("p50_block", pa.int64()),
+     ("p99_block", pa.int64()), ("ts", _TS)]
 )
 _SCORES = pa.schema(
     [("run_id", pa.string()), ("stage", pa.string()), ("kind", pa.string()),
@@ -130,6 +137,24 @@ def append_partition_rows(run_dir: str | None, run_id: str, stage_name: str) -> 
             "stage": [stage_name] * len(parts),
             "partition_id": [p for p, _ in parts],
             "rows": [n for _, n in parts],
+        },
+    )
+
+
+def append_block_rows(run_dir: str | None, run_id: str, summary: dict) -> None:
+    """The :func:`block_skew_metrics` row for a stored blocks stage, from
+    the size summary its build recorded in the sidecar (no-op without
+    run_dir)."""
+    if run_dir is None:
+        return
+    _append_rows(
+        run_dir,
+        "blocks",
+        _BLOCKS,
+        {
+            "run_id": [run_id],
+            "stage": ["blocks"],
+            **{k: [summary[k]] for k in _BLOCKS.names[2:-1]},
         },
     )
 

@@ -15,7 +15,9 @@ costs no job of its own:
   params fingerprint, in the ``_STAGE_METRICS.json`` sidecar (Spark's parquet reader skips
   ``_``-prefixed files); :func:`stage_metrics` reads them back;
 * :func:`stage_partitions` reads rows per write task from the parquet
-  footers of the stage's ``part-NNNNN`` files.
+  footers of the stage's ``part-NNNNN`` files;
+* values the build computed on the driver anyway (``facts``, e.g. the
+  blocks stage's size summary) are kept in the sidecar too.
 
 A stage is finished only when both ``_SUCCESS`` and the sidecar exist: the
 sidecar is written last, so a run that died between the parquet commit and
@@ -77,6 +79,7 @@ def stage(
     build: Callable[[], DataFrame],
     params: dict | None = None,
     observe: dict[str, Column] | None = None,
+    facts: dict | None = None,
 ) -> DataFrame:
     """Materialise one pipeline stage, or reuse a prior run's output.
 
@@ -106,6 +109,12 @@ def stage(
     stage records; :func:`stage_metrics` returns them.  A stored stage
     whose sidecar lacks one of them is rebuilt.  Ignored without
     ``run_dir``.
+
+    ``facts`` is a dict the build fills with values it computed on the
+    driver on the way (the blocks stage's size summary).  They are stored
+    in the sidecar, and a reused stage fills ``facts`` back from it, so the
+    caller reads them the same way whether or not the stage ran.  A stored
+    stage whose sidecar holds no facts is rebuilt.
     """
     if run_dir is None:
         return build().localCheckpoint(eager=False)
@@ -117,6 +126,7 @@ def stage(
         record
         and record.get("params_hash") == fingerprint
         and set(observe) <= set(record["metrics"])
+        and (facts is None or "facts" in record)
     ):
         frame = build()
         obs = Observation()
@@ -129,7 +139,11 @@ def stage(
             "schema": frame.schema.jsonValue(),
             "params_hash": fingerprint,
         }
+        if facts is not None:
+            record["facts"] = facts
         _write_record(path, record)
+    if facts is not None:
+        facts.update(record["facts"])
     # the recorded schema spares the schema-inference job of a plain read
     return spark.read.schema(StructType.fromJson(record["schema"])).parquet(path)
 

@@ -29,15 +29,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.udfs import block_tokens_udf, pair_decision_udf
-from ..operators.blocking import build_blocks, salted_pair_join
+from ..functions.udfs import block_tokens_array_udf, pair_decision_udf
+from ..operators.blocking import capped_blocks, salted_pair_join
 from ..operators.components import connected_components
 from ..sources.transcripts import ENDING_RULES, GLOBAL_ENDINGS
 from .audit import (
-    append_audit,
+    append_block_rows,
     append_partition_rows,
     append_score_rows,
-    block_skew_metrics,
     score_observations,
 )
 from .checkpoint import stage
@@ -136,34 +135,33 @@ def extract_entities(transcripts: DataFrame) -> DataFrame:
     containment scan analog, matcher.py:582-599); ``is_hamlet`` reads the
     "kind: hamlet" marker (the instanceof-Q5084 analog the reference gates
     the house trim on, matcher.py:1036-1046).
+
+    One aggregate over ``conv_id`` yields every column: a conversation
+    with no mention has no entity, and null text adds nothing
+    (``collect_list`` skips the null match arrays).  Blocking tokens are
+    derived per distinct name inside each Arrow batch
+    (:func:`block_tokens_array_udf`), so the per-name dedup, regroup and
+    context join of a per-mention plan are not needed.
     """
-    mentions = transcripts.select(
-        F.col("conv_id"),
-        F.explode(F.regexp_extract_all("text", F.lit(_MENTION_PATTERN), F.lit(1))).alias(
-            "name"
-        ),
-    )
-    per_name = mentions.dropDuplicates(["conv_id", "name"]).withColumn(
-        "tokens", block_tokens_udf("name")
-    )
-    context = transcripts.groupBy("conv_id").agg(
-        F.array_sort(
+
+    def _distinct_matches(pattern: str) -> F.Column:
+        return F.array_sort(
             F.array_distinct(
                 F.flatten(
-                    F.collect_list(
-                        F.regexp_extract_all("text", F.lit(_PLACE_PATTERN), F.lit(1))
-                    )
+                    F.collect_list(F.regexp_extract_all("text", F.lit(pattern), F.lit(1)))
                 )
             )
-        ).alias("place_names"),
-        F.max(F.col("text").contains("kind: hamlet")).alias("is_hamlet"),
-    )
-    return (
-        per_name.groupBy("conv_id")
-        .agg(
-            F.sort_array(F.collect_set("name")).alias("names"),
-            F.array_distinct(F.flatten(F.collect_list("tokens"))).alias("tokens"),
         )
+
+    return (
+        transcripts.groupBy("conv_id")
+        .agg(
+            _distinct_matches(_MENTION_PATTERN).alias("names"),
+            _distinct_matches(_PLACE_PATTERN).alias("place_names"),
+            F.max(F.col("text").contains("kind: hamlet")).alias("is_hamlet"),
+        )
+        .filter(F.size("names") > 0)
+        .withColumn("tokens", block_tokens_array_udf("names"))
         .withColumn(
             "endings",
             _derived_endings(
@@ -177,7 +175,7 @@ def extract_entities(transcripts: DataFrame) -> DataFrame:
                 _acronym_keys(F.col("names")),
             ),
         )
-        .join(context, "conv_id")
+        .select("conv_id", "names", "tokens", "endings", "place_names", "is_hamlet")
     )
 
 
@@ -376,7 +374,13 @@ def score_pairs(
             _with_context(exploded.select(*key).dropDuplicates(key))
             .select(*key, decision.alias("decision"))
         )
-        scored = exploded.join(scored_names, key)
+        # the join back is pinned to a sort-merge join.  Unpinned, AQE
+        # broadcast whichever side's shuffle it had measured first: when
+        # the exploded side finished before the scored side's shuffle was
+        # submitted, the scored shuffle was dropped, otherwise it ran too,
+        # and the edges write took one job and four stages more.  Pinned,
+        # both sides shuffle every time; AQE still splits skewed keys.
+        scored = exploded.join(scored_names.hint("merge"), key)
     else:
         scored = _with_context(exploded).withColumn("decision", decision)
     return (
@@ -407,11 +411,17 @@ def run_pipeline(
 
     Returns the named stage outputs; with ``run_dir`` each stage is
     checkpointed (resumable) and audited under ``run_dir/audit``.  The
-    audit launches no job of its own except the block-skew aggregate:
-    ``partitions`` rows come from each stored stage's parquet footers and
-    ``scores`` rows from the kind counts observed on the edges write
-    (``plans.audit``); a reused stage is audited from the same files, so
-    a resume over finished stages launches only that aggregate.
+    audit launches no job of its own: ``partitions`` rows come from each
+    stored stage's parquet footers, ``scores`` rows from the kind counts
+    observed on the edges write and the ``blocks`` row from the size
+    summary the block cap's own aggregate returned (``plans.audit``); a
+    reused stage is audited from the same files and sidecars, so a resume
+    over finished stages launches no job.
+
+    Both skew guards own their no-op paths: the block cap anti-joins
+    nothing when no key is over ``max_block_size``, and the salted pair
+    join runs the plain join when the largest kept block (read from the
+    blocks summary, also on resume) proves that no key is hot.
 
     ``snm_window`` (opt-in, default off so existing runs are byte-stable)
     unions a sorted-neighborhood channel over each entity's primary name
@@ -455,19 +465,22 @@ def run_pipeline(
     # a stage's params are its upstream stage's params plus its own, so a
     # changed parameter rebuilds every stage downstream of where it acts
     block_params = {"max_block_size": max_block_size}
+    block_summary: dict = {}
+
+    def _blocks() -> DataFrame:
+        frame, summary = capped_blocks(entities, "conv_id", "tokens", max_block_size)
+        block_summary.update(summary)
+        return frame
+
     blocks = stage(
-        spark,
-        run_dir,
-        "blocks",
-        lambda: build_blocks(entities, "conv_id", "tokens", max_block_size),
-        params=block_params,
+        spark, run_dir, "blocks", _blocks, params=block_params, facts=block_summary
     )
-    append_audit(block_skew_metrics(blocks, run_id), run_dir, "blocks")
+    append_block_rows(run_dir, run_id, block_summary)
 
     def _pairs() -> DataFrame:
-        p = salted_pair_join(blocks, blocks, salt=salt).filter(
-            F.col("left_id") < F.col("right_id")
-        )
+        p = salted_pair_join(
+            blocks, blocks, salt=salt, max_block=block_summary["max_block"] or 0
+        ).filter(F.col("left_id") < F.col("right_id"))
         if snm_window is not None:
             from osm_wikidata_spark.operators.neighborhood import (
                 sorted_neighborhood_pairs,

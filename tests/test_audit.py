@@ -1,12 +1,15 @@
-"""Stage audit recorded by the stage's own write: the pyarrow-written
-``partitions``/``scores`` rows agree with the Spark-side helpers, audit
-tables mixing Spark- and pyarrow-written files read with one schema, a kind
-outside the cascade's enum fails loudly, and a resume launches no audit job
-beyond the block-skew aggregate."""
+"""Stage audit recorded by the stage's own work: the pyarrow-written
+``partitions``/``scores``/``blocks`` rows agree with the Spark-side
+helpers, audit tables mixing Spark- and pyarrow-written files read with one
+schema, a kind outside the cascade's enum fails loudly, a resume launches
+no job, and a durable run's entities and pairs stages keep their job
+counts."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,12 +64,35 @@ def test_partition_rows_sum_to_stage_count(spark, finished_run):
         assert sum(r["rows"] for r in rows) == out[name].count(), name
 
 
+def _block_row(row) -> dict:
+    return {k: row[k] for k in row.asDict() if k not in ("run_id", "ts")}
+
+
+def test_block_row_equals_block_skew_metrics(spark, finished_run):
+    _, run_dir, out = finished_run
+    (got,) = _audit(spark, run_dir, "blocks", "first").collect()
+    assert _block_row(got) == _block_row(block_skew_metrics(out["blocks"], "first").first())
+
+
+def test_block_row_of_empty_blocks(spark, tmp_path):
+    """A cap that keeps no key leaves an empty index: its audit row has
+    no block, null sizes, and still equals block_skew_metrics."""
+    transcripts, _ = synth_transcripts(spark, n_conversations=20, turns_per_conv=2)
+    run_dir = str(tmp_path / "run")
+    out = run_pipeline(spark, transcripts, run_dir=run_dir, run_id="empty", max_block_size=0)
+    assert out["blocks"].count() == 0
+    (got,) = _audit(spark, run_dir, "blocks", "empty").collect()
+    assert _block_row(got) == _block_row(block_skew_metrics(out["blocks"], "empty").first())
+    assert got["n_blocks"] == 0 and got["max_block"] is None
+
+
 def test_audit_table_mixing_spark_and_pyarrow_files_reads(spark, finished_run):
     """A table already holding Spark-written files (as every earlier
     version wrote them) still reads with one schema after a new append."""
     transcripts, run_dir, out = finished_run
     append_audit(partition_metrics(out["pairs"], "spark", "pairs"), run_dir, "partitions")
     append_audit(score_distribution(out["edges"], "spark"), run_dir, "scores")
+    append_audit(block_skew_metrics(out["blocks"], "spark"), run_dir, "blocks")
     spark_schema = {
         t: spark.read.parquet(
             *[
@@ -75,10 +101,10 @@ def test_audit_table_mixing_spark_and_pyarrow_files_reads(spark, finished_run):
                 if f.endswith(".snappy.parquet")
             ]
         ).schema
-        for t in ("partitions", "scores")
+        for t in ("partitions", "scores", "blocks")
     }
     run_pipeline(spark, transcripts, run_dir=run_dir, run_id="after")
-    for table in ("partitions", "scores"):
+    for table in ("partitions", "scores", "blocks"):
         path = os.path.join(run_dir, "audit", table)
         files = os.listdir(path)
         assert any(f.endswith(".snappy.parquet") for f in files)
@@ -107,19 +133,68 @@ def test_edge_kind_outside_enum_raises(spark, tmp_path):
     assert not os.path.exists(os.path.join(run_dir, "audit", "scores"))
 
 
-def test_resume_launches_only_the_block_skew_jobs(spark, finished_run):
+def test_resume_launches_no_job(spark, finished_run):
     """Re-running over a finished run_dir reads every stage and audits it
-    from its files: the only jobs are the block-skew aggregate's."""
-    transcripts, run_dir, out = finished_run
+    from its files and sidecars: no Spark job at all."""
+    transcripts, run_dir, _ = finished_run
     resume = jobs_in_group(
         spark,
         "test-audit-resume",
         lambda: run_pipeline(spark, transcripts, run_dir=run_dir, run_id="resume"),
     )
-    skew = jobs_in_group(
-        spark,
-        "test-audit-skew",
-        lambda: append_audit(block_skew_metrics(out["blocks"], "skew"), run_dir, "blocks"),
-    )
-    assert 0 < resume <= skew
+    assert resume == 0
     assert _audit(spark, run_dir, "scores", "resume").count() > 0
+    assert _audit(spark, run_dir, "blocks", "resume").count() == 1
+
+
+def test_blocks_sidecar_without_summary_rebuilds(spark, finished_run, tmp_path):
+    """A run_dir whose blocks sidecar predates the size summary rebuilds
+    the blocks stage (its summary feeds the audit row and the pair join)
+    to identical output, and reuses the stages after it."""
+    transcripts, finished, out = finished_run
+    run_dir = str(tmp_path / "run")
+    shutil.copytree(finished, run_dir)
+    sidecar = os.path.join(run_dir, "blocks", "_STAGE_METRICS.json")
+    with open(sidecar) as f:
+        record = json.load(f)
+    summary = record.pop("facts")
+    with open(sidecar, "w") as f:
+        json.dump(record, f)
+    pairs_success = os.path.join(run_dir, "pairs", "_SUCCESS")
+    pairs_mtime = os.path.getmtime(pairs_success)
+    again = run_pipeline(spark, transcripts, run_dir=run_dir, run_id="legacy")
+    with open(sidecar) as f:
+        assert json.load(f)["facts"] == summary
+    assert os.path.getmtime(pairs_success) == pairs_mtime
+    assert sorted(again["blocks"].collect()) == sorted(out["blocks"].collect())
+    assert sorted(again["components"].collect()) == sorted(out["components"].collect())
+    assert _audit(spark, run_dir, "blocks", "legacy").count() == 1
+
+
+def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatch):
+    """A durable run's entities stage is one aggregate plus its write (2
+    jobs); with no key hot its pairs stage is the plain join, the pair
+    dedup and the write (3 jobs)."""
+    from osm_wikidata_spark.plans import pipeline
+
+    real_stage = pipeline.stage
+    jobs = {}
+
+    def counted_stage(spark_, run_dir, name, build, **kw):
+        out = {}
+        jobs[name] = jobs_in_group(
+            spark_,
+            f"audit-stage-{name}",
+            lambda: out.setdefault("df", real_stage(spark_, run_dir, name, build, **kw)),
+        )
+        return out["df"]
+
+    transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
+    # a stored input, as a durable run reads one: the generator's own
+    # joins would otherwise run inside the entities stage
+    transcripts.write.parquet(str(tmp_path / "input"))
+    stored = spark.read.schema(transcripts.schema).parquet(str(tmp_path / "input"))
+    monkeypatch.setattr(pipeline, "stage", counted_stage)
+    pipeline.run_pipeline(spark, stored, run_dir=str(tmp_path / "run"), run_id="jobs")
+    assert jobs["entities"] <= 2
+    assert jobs["pairs"] <= 3

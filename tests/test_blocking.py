@@ -3,14 +3,18 @@ top-k determinism (SURVEY.md §7 stage 6 skew demonstration)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_wikidata_spark.operators.blocking import (
+    BLOCK_SUMMARY,
     block_size_stats,
     build_blocks,
+    capped_blocks,
     salted_pair_join,
     top_k_per_group,
 )
+from osm_wikidata_spark.plans.audit import block_skew_metrics
 
 
 def _skewed_blocks(spark):
@@ -71,6 +75,42 @@ def test_block_size_cap_drops_hot_keys(spark):
     keys = {r["block_key"] for r in capped.select("block_key").distinct().collect()}
     assert "hot" not in keys
     assert len(keys) == 30  # every cold key survives
+
+
+def _pair_rows(pairs):
+    return sorted(tuple(r) for r in pairs.select("left_id", "right_id", "block_key").collect())
+
+
+def test_salted_join_no_op_path_equals_two_path(spark):
+    """Told that no key is larger than 40 rows, with 40² within the
+    threshold, the join skips the hot-key split and gives the two-path
+    join's rows; one row more (41² > threshold) keeps the salted path."""
+    blocks = _skewed_blocks(spark)
+    two_path = salted_pair_join(blocks, blocks, salt=8, hot_threshold=100)
+    no_op = salted_pair_join(blocks, blocks, salt=8, hot_threshold=40 * 40, max_block=40)
+    assert _pair_rows(no_op) == _pair_rows(two_path)
+    plan = no_op._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan and "salt#" not in plan
+    salted = salted_pair_join(blocks, blocks, salt=8, hot_threshold=40 * 40, max_block=41)
+    plan = salted._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LeftAnti") == 2 and "salt#" in plan
+    assert _pair_rows(salted) == _pair_rows(two_path)
+
+
+@pytest.mark.parametrize("cap", [10, 30, 0, None])
+def test_capped_blocks_summary_equals_block_skew_metrics(spark, cap):
+    """The cap's one aggregate returns what block_skew_metrics computes
+    over the capped index, also when the cap keeps no key (cap 0); with
+    no key over the cap nothing is anti-joined."""
+    rows = [(f"r{i:03d}", ["hot", f"cold{i % 7}", f"uniq{i}"]) for i in range(30)]
+    df = spark.createDataFrame(rows, "id string, tokens array<string>")
+    blocks, summary = capped_blocks(df, "id", "tokens", cap)
+    want = block_skew_metrics(blocks, "r").first()
+    assert summary == {k: want[k] for k in BLOCK_SUMMARY}
+    plan = blocks._jdf.queryExecution().optimizedPlan().toString()
+    assert ("LeftAnti" in plan) == (cap is not None and cap < 30)
+    if cap == 0:
+        assert summary["n_blocks"] == 0 and summary["max_block"] is None
 
 
 def test_block_size_stats(spark):

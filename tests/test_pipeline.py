@@ -11,6 +11,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from osm_wikidata_spark.operators.blocking import capped_blocks, salted_pair_join
 from osm_wikidata_spark.plans.checkpoint import completed_stages
 from osm_wikidata_spark.plans.pipeline import extract_entities, run_pipeline
 from osm_wikidata_spark.sources.transcripts import synth_transcripts
@@ -77,6 +78,147 @@ def test_entity_extraction(spark):
     for r in rows:
         assert len(r["names"]) == 1  # one mention name per conversation
         assert r["tokens"]
+
+
+_TRANSCRIPT_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+
+def _entities_oracle(transcripts):
+    """The per-mention formula extract_entities used to run: mentions
+    exploded and deduplicated per (conv_id, name), tokenised per name,
+    regrouped, then inner-joined to a per-conversation context
+    aggregate."""
+    from osm_wikidata_spark.functions.udfs import block_tokens_udf
+    from osm_wikidata_spark.plans.pipeline import (
+        _MENTION_PATTERN,
+        _PLACE_PATTERN,
+        _acronym_keys,
+        _derived_endings,
+        _full_name_keys,
+        _name_words,
+    )
+
+    def _all(pattern):
+        return F.regexp_extract_all("text", F.lit(pattern), F.lit(1))
+
+    mentions = transcripts.select("conv_id", F.explode(_all(_MENTION_PATTERN)).alias("name"))
+    per_name = mentions.dropDuplicates(["conv_id", "name"]).withColumn(
+        "tokens", block_tokens_udf("name")
+    )
+    context = transcripts.groupBy("conv_id").agg(
+        F.array_sort(F.array_distinct(F.flatten(F.collect_list(_all(_PLACE_PATTERN))))).alias(
+            "place_names"
+        ),
+        F.max(F.col("text").contains("kind: hamlet")).alias("is_hamlet"),
+    )
+    return (
+        per_name.groupBy("conv_id")
+        .agg(
+            F.sort_array(F.collect_set("name")).alias("names"),
+            F.array_distinct(F.flatten(F.collect_list("tokens"))).alias("tokens"),
+        )
+        .withColumn(
+            "endings",
+            _derived_endings(F.array_distinct(F.flatten(F.transform("names", _name_words)))),
+        )
+        .withColumn(
+            "tokens",
+            F.array_union(
+                F.array_union("tokens", _full_name_keys(F.col("names"))),
+                _acronym_keys(F.col("names")),
+            ),
+        )
+        .join(context, "conv_id")
+    )
+
+
+def _entity_rows(entities) -> list[tuple]:
+    # tokens and endings are sets: the oracle's order follows its shuffle
+    return sorted(
+        (
+            r["conv_id"],
+            tuple(r["names"]),
+            tuple(sorted(r["tokens"])),
+            tuple(sorted(r["endings"])),
+            tuple(r["place_names"]),
+            r["is_hamlet"],
+        )
+        for r in entities.collect()
+    )
+
+
+def test_entity_extraction_equals_per_mention_oracle(spark):
+    """One aggregate per conversation gives the per-mention formula's
+    rows: null text, a conversation without mentions, mentions repeated
+    across turns, case variants, places and the hamlet flag."""
+    rows = [
+        ("c-null", 0, "user", None, None, None),
+        ("c-null", 1, "user", 'Near "Old Mill Inn" «Springfield».', None, None),
+        ("c-null", 2, "user", None, None, None),
+        ("c-all-null", 0, "user", None, None, None),
+        ("c-none", 0, "user", "no quoted name here «Shelbyville»", None, None),
+        ("c-none", 1, "user", "kind: hamlet", None, None),
+        ("c-dup", 0, "user", 'We saw "Grand Hall" and "grand hall".', None, None),
+        ("c-dup", 1, "user", 'Back to "Grand Hall", kind: hamlet «Ogdenville»', None, None),
+        ("c-dup", 2, "user", '"GRAND HALL" «Ogdenville» "St. Mary\'s Church"', None, None),
+        ("c-acro", 0, "user", '"BAC" is the "Baryshnikov Arts Center"', None, None),
+    ]
+    handmade = spark.createDataFrame(rows, _TRANSCRIPT_SCHEMA)
+    got = _entity_rows(extract_entities(handmade))
+    assert got == _entity_rows(_entities_oracle(handmade))
+    assert [r[0] for r in got] == ["c-acro", "c-dup", "c-null"]
+    synthetic, _ = synth_transcripts(spark, n_conversations=120, turns_per_conv=4)
+    assert _entity_rows(extract_entities(synthetic)) == _entity_rows(_entities_oracle(synthetic))
+
+
+def test_pipeline_salts_a_block_over_256_rows(spark, monkeypatch):
+    """A block of 300 rows has 300² pairs, over the salted join's
+    threshold: the pairs stage keeps the pinned salted hot path.  A block
+    of 200 rows (200² within it) takes the plain join."""
+    from osm_wikidata_spark.plans import pipeline
+
+    real_stage = pipeline.stage
+
+    def pairs_plan(n):
+        plans = {}
+
+        def recording_stage(spark_, run_dir, name, build, **kw):
+            def _build():
+                frame = build()
+                plans[name] = frame._jdf.queryExecution().executedPlan().toString()
+                return frame
+
+            return real_stage(spark_, run_dir, name, _build, **kw)
+
+        monkeypatch.setattr(pipeline, "stage", recording_stage)
+        transcripts = spark.createDataFrame(
+            [(f"c{i:03d}", 0, "user", f'At "Foo Hall {i}".', None, None) for i in range(n)],
+            _TRANSCRIPT_SCHEMA,
+        )
+        pipeline.run_pipeline(spark, transcripts)
+        return plans["pairs"]
+
+    assert "REPARTITION_BY_NUM" in pairs_plan(300)
+    assert "REPARTITION_BY_NUM" not in pairs_plan(200)
+
+
+def test_score_pairs_join_back_is_sort_merge(spark):
+    """The scored name pairs join back to the exploded pairs by a
+    sort-merge join in every run: a join AQE may turn into a broadcast
+    of whichever side it measured first cost one job more in some runs
+    than in others."""
+    from osm_wikidata_spark.plans.pipeline import score_pairs
+
+    transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
+    entities = extract_entities(transcripts).localCheckpoint()
+    blocks, _ = capped_blocks(entities, "conv_id", "tokens", 1000)
+    pairs = salted_pair_join(blocks, blocks).filter(F.col("left_id") < F.col("right_id"))
+    edges = score_pairs(pairs, entities)
+    assert edges.collect()
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    joins = [line for line in plan.splitlines() if "left_name" in line and "Join" in line]
+    assert joins and all("SortMergeJoin" in line for line in joins), plan
 
 
 def test_per_entity_endings_cluster(spark):
