@@ -24,7 +24,6 @@ set-oriented DataFrame op so Catalyst/AQE own the physical plan.
 
 from __future__ import annotations
 
-import hashlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -183,175 +182,68 @@ def score_pairs(
     pairs: DataFrame,
     entities: DataFrame,
     endings: list[str] | None = None,
-    dedup_names: bool = True,
 ) -> DataFrame:
     """Name cross-product scoring of candidate pairs via the kernel UDF.
 
-    With ``dedup_names`` (default), exact-name pairs are deduplicated
-    *before* the UDF (the set-level equivalent of the reference's memo
-    cache, match.py:1029-1048), scored once, and joined back — the right
-    plan for Zipfian name data where a few names dominate.  With
-    ``dedup_names=False`` the UDF runs directly on the exploded pairs (one
-    less shuffle and no join-back) — the right plan when names are mostly
-    unique, where the dedup would be pure overhead; the in-batch memo still
-    catches local repeats.
+    ``entities`` carries ``conv_id``, ``names``, ``endings``,
+    ``place_names`` and ``is_hamlet`` (the :func:`extract_entities`
+    schema); null arrays count as empty and a null flag as false.
+
+    Each entity's decision context rides the two entity joins as one
+    struct ``ctx`` of (endings, places, hamlet).  Exact (name pair, both
+    contexts) rows are deduplicated before the UDF, scored once and joined
+    back: the set-level equivalent of the reference's memo cache
+    (match.py:1029-1048), keyed on ``(left_name, right_name, left_ctx,
+    right_ctx)``.  The struct's arrays are sorted so that one context set
+    is one key whatever order its entity row lists it in; the key holds
+    the arrays themselves, so two distinct contexts never share a key.
 
     The trim set per pair = GLOBAL_ENDINGS (or the ``endings`` override;
-    ``[]`` trims no global ending) ∪ both sides' per-entity ``endings`` —
+    ``[]`` trims no global ending) ∪ both sides' per-entity endings,
     mirroring the reference's per-item endings derivation
     (matcher.py:641-656) while keeping the pair decision a pure function
-    of its own row.
+    of its own row.  The place context is the union of both sides'
+    places (matcher.py:714-720's ``place_names | within``), null when
+    empty so the UDF skips the place-strip retry (match.py:708-719).  The
+    hamlet house-trim gate stays per side (matcher.py:1036-1046).
     """
-    sep = "\x1f"
-    global_endings = F.array(
-        *[F.lit(e) for e in (GLOBAL_ENDINGS if endings is None else endings)]
-    ).cast("array<string>")
     empty = F.array().cast("array<string>")
-    # null array values coalesce to empty HERE so the fingerprint below
-    # cannot alias distinct shapes (concat_ws silently skips nulls:
-    # endings=null/places=["x"] and endings=["x"]/places=null would
-    # otherwise hash identically and rehydrate the wrong context)
     ent = entities.select(
         "conv_id",
         "names",
-        (
-            F.coalesce(F.col("endings"), empty)
-            if "endings" in entities.columns
-            else empty
-        ).alias("endings"),
-        (
-            F.coalesce(F.col("place_names"), empty)
-            if "place_names" in entities.columns
-            else empty
-        ).alias("place_names"),
-        (
-            F.coalesce("is_hamlet", F.lit(False))
-            if "is_hamlet" in entities.columns
-            else F.lit(False)
-        ).alias("is_hamlet"),
+        F.struct(
+            F.array_sort(F.coalesce("endings", empty)).alias("endings"),
+            F.array_sort(F.coalesce("place_names", empty)).alias("places"),
+            F.coalesce("is_hamlet", F.lit(False)).alias("hamlet"),
+        ).alias("ctx"),
     )
-    # Per-ENTITY context fingerprint, computed once per conversation (N
-    # rows), not once per exploded candidate-name row: the pair decision is
-    # a pure function of (left_name, right_name, endings ∪, places ∪,
-    # left/right hamlet flags), so the two entity fingerprints identify the
-    # decision inputs and NO array work rides the (much larger) pair
-    # explosion — pairs without entity context all share one fingerprint,
-    # preserving the Zipfian memo win.
-    # element separator (\x1e) differs from the field separator (\x1f) so
-    # array contents can never alias a field boundary
-    ent = ent.withColumn(
-        "ctx_fp",
-        F.md5(
-            F.concat_ws(
-                sep,
-                F.array_join(F.array_sort("endings"), "\x1e"),
-                F.array_join(F.array_sort("place_names"), "\x1e"),
-                F.col("is_hamlet").cast("string"),
-            )
-        ),
-    )
-    # tiny dim: one row per DISTINCT context (≈ |ENDING_RULES| × place sets)
-    ctx_dim = ent.select(
-        "ctx_fp", "endings", "place_names", "is_hamlet"
-    ).dropDuplicates(["ctx_fp"])
+
+    def _side(side: str) -> DataFrame:
+        return ent.select(
+            F.col("conv_id").alias(f"{side}_id"),
+            F.col("names").alias(f"{side}_names"),
+            F.col("ctx").alias(f"{side}_ctx"),
+        )
 
     exploded = (
-        pairs.join(
-            ent.select(
-                F.col("conv_id").alias("left_id"),
-                F.col("names").alias("left_names"),
-                F.col("ctx_fp").alias("left_fp"),
-            ),
-            "left_id",
-        )
-        .join(
-            ent.select(
-                F.col("conv_id").alias("right_id"),
-                F.col("names").alias("right_names"),
-                F.col("ctx_fp").alias("right_fp"),
-            ),
-            "right_id",
-        )
+        pairs.join(_side("left"), "left_id")
+        .join(_side("right"), "right_id")
         .select(
-            "left_id",
-            "right_id",
-            "block_key",
-            "left_fp",
-            "right_fp",
+            "left_id", "right_id", "block_key", "left_ctx", "right_ctx",
             F.explode("left_names").alias("left_name"),
-            F.col("right_names"),
+            "right_names",
         )
         .select(
-            "left_id", "right_id", "block_key", "left_fp", "right_fp",
+            "left_id", "right_id", "block_key", "left_ctx", "right_ctx",
             "left_name",
             F.explode("right_names").alias("right_name"),
         )
     )
 
-    # fingerprint of the EMPTY context (no endings, no places, not hamlet)
-    # — must mirror the ctx_fp expression above byte-for-byte
-    empty_fp = hashlib.md5("\x1f".join(["", "", "false"]).encode()).hexdigest()
-
-    def _with_context(df: DataFrame) -> DataFrame:
-        """Rehydrate the pair's decision context from the ctx dim and fold
-        it to pair level: trim set = GLOBAL ∪ both sides (matcher.py:641-656);
-        the hamlet house-trim gate stays PER-SIDE (left_hamlet/right_hamlet
-        booleans ride to the UDF, which applies the reference's per-item
-        ``trim_house=not item.is_hamlet()`` per direction,
-        matcher.py:1036-1046); place context = union of both sides'
-        within-context names (matcher.py:714-720's ``place_names | within``),
-        null when empty so the UDF skips the place-strip retry
-        (match.py:708-719).
-
-        Shape: one LEFT join per side against the dim of NON-EMPTY
-        contexts, coalescing misses (the overwhelming majority — the
-        empty-context fingerprint) to the global defaults.  Chosen over
-        the two rejected alternatives: a forced broadcast is unsafe
-        because ctx_dim's cardinality is data-dependent (distinct
-        place-name sets), and a filter-split + union consumes the
-        (expensive, un-materialised) upstream twice — measured 2.5x on
-        the flagship.  The empty fingerprint never matches the dim, and
-        its hot probe partitions are handled by AQE skew-join splitting
-        (the dim side replicates under a left join); when the dim is
-        genuinely small AQE broadcasts it and the shuffle disappears.
-        """
-        ctx_nonempty = ctx_dim.filter(F.col("ctx_fp") != empty_fp)
-        out = df.join(
-            ctx_nonempty.select(
-                F.col("ctx_fp").alias("left_fp"),
-                F.col("endings").alias("le"),
-                F.col("place_names").alias("lp"),
-                F.col("is_hamlet").alias("lh"),
-            ),
-            "left_fp",
-            "left",
-        ).join(
-            ctx_nonempty.select(
-                F.col("ctx_fp").alias("right_fp"),
-                F.col("endings").alias("re"),
-                F.col("place_names").alias("rp"),
-                F.col("is_hamlet").alias("rh"),
-            ),
-            "right_fp",
-            "left",
-        )
-        empty_arr = F.array().cast("array<string>")
-        le, re_ = F.coalesce("le", empty_arr), F.coalesce("re", empty_arr)
-        lp, rp = F.coalesce("lp", empty_arr), F.coalesce("rp", empty_arr)
-        pair_endings = F.array_sort(
-            F.array_union(global_endings, F.array_union(le, re_))
-        )
-        pair_places = F.when(
-            F.size(F.array_union(lp, rp)) > 0, F.array_sort(F.array_union(lp, rp))
-        )
-        return (
-            out.withColumn("pair_endings", pair_endings)
-            .withColumn("pair_places", pair_places)
-            .withColumn("left_hamlet", F.coalesce("lh", F.lit(False)))
-            .withColumn("right_hamlet", F.coalesce("rh", F.lit(False)))
-            .drop("le", "lp", "lh", "re", "rp", "rh")
-        )
-
+    global_endings = F.array(
+        *[F.lit(e) for e in (GLOBAL_ENDINGS if endings is None else endings)]
+    ).cast("array<string>")
+    places = F.array_union("left_ctx.places", "right_ctx.places")
     # the cascade is asymmetric (record-side-only retries like drop_initials,
     # match.py:688-693) and transcripts have no record/entity sides, so the
     # UDF scores both directions INSIDE one call (pair_decision_udf): one
@@ -359,30 +251,29 @@ def score_pairs(
     decision = pair_decision_udf(
         "left_name",
         "right_name",
-        F.col("pair_endings"),
-        F.col("pair_places"),
-        F.col("left_hamlet"),
-        F.col("right_hamlet"),
+        F.array_sort(
+            F.array_union(
+                global_endings,
+                F.array_union("left_ctx.endings", "right_ctx.endings"),
+            )
+        ),
+        F.when(F.size(places) > 0, F.array_sort(places)),
+        F.col("left_ctx.hamlet"),
+        F.col("right_ctx.hamlet"),
     )
 
-    if dedup_names:
-        # exact-(name pair, context) dedup before the UDF: the distinct set
-        # is shuffled/joined on four short string columns, and the context
-        # arrays are only materialised on the distinct side
-        key = ["left_name", "right_name", "left_fp", "right_fp"]
-        scored_names = (
-            _with_context(exploded.select(*key).dropDuplicates(key))
-            .select(*key, decision.alias("decision"))
-        )
-        # the join back is pinned to a sort-merge join.  Unpinned, AQE
-        # broadcast whichever side's shuffle it had measured first: when
-        # the exploded side finished before the scored side's shuffle was
-        # submitted, the scored shuffle was dropped, otherwise it ran too,
-        # and the edges write took one job and four stages more.  Pinned,
-        # both sides shuffle every time; AQE still splits skewed keys.
-        scored = exploded.join(scored_names.hint("merge"), key)
-    else:
-        scored = _with_context(exploded).withColumn("decision", decision)
+    key = ["left_name", "right_name", "left_ctx", "right_ctx"]
+    scored_names = (
+        exploded.select(*key).dropDuplicates(key)
+        .select(*key, decision.alias("decision"))
+    )
+    # the join back is pinned to a sort-merge join.  Unpinned, AQE
+    # broadcast whichever side's shuffle it had measured first: when
+    # the exploded side finished before the scored side's shuffle was
+    # submitted, the scored shuffle was dropped, otherwise it ran too,
+    # and the edges write took one job and four stages more.  Pinned,
+    # both sides shuffle every time; AQE still splits skewed keys.
+    scored = exploded.join(scored_names.hint("merge"), key)
     return (
         scored.groupBy("left_id", "right_id")
         .agg(

@@ -79,7 +79,7 @@ n_pairs = pairs.count()
 # warm up Python workers + codegen once (a one-time per-JVM cost that grows
 # with worker count and would otherwise swamp the scaling signal), then take
 # the median of 3 steady-state timings of the pairwise scoring stage
-scored = score_pairs(pairs, entities, dedup_names=False)
+scored = score_pairs(pairs, entities)
 scored.write.mode("overwrite").format("noop").save()
 times = []
 for _ in range(3):

@@ -2,8 +2,8 @@
 ``partitions``/``scores``/``blocks`` rows agree with the Spark-side
 helpers, audit tables mixing Spark- and pyarrow-written files read with one
 schema, a kind outside the cascade's enum fails loudly, a resume launches
-no job, and a durable run's entities and pairs stages keep their job
-counts."""
+no job, and a durable run's entities, pairs and edges stages keep their
+job counts."""
 
 from __future__ import annotations
 
@@ -174,7 +174,9 @@ def test_blocks_sidecar_without_summary_rebuilds(spark, finished_run, tmp_path):
 def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatch):
     """A durable run's entities stage is one aggregate plus its write (2
     jobs); with no key hot its pairs stage is the plain join, the pair
-    dedup and the write (3 jobs)."""
+    dedup and the write (3 jobs).  The edges stage carries each entity's
+    context on the entity joins, so no context table is built and
+    broadcast beside them (8 jobs)."""
     from osm_wikidata_spark.plans import pipeline
 
     real_stage = pipeline.stage
@@ -198,3 +200,4 @@ def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatc
     pipeline.run_pipeline(spark, stored, run_dir=str(tmp_path / "run"), run_id="jobs")
     assert jobs["entities"] <= 2
     assert jobs["pairs"] <= 3
+    assert jobs["edges"] <= 8

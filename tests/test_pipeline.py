@@ -444,9 +444,9 @@ def test_hamlet_house_trim_is_per_side(spark):
 
 
 def test_ctx_fp_null_vs_empty_no_alias(spark):
-    """Null endings with non-null places must not fingerprint-collide with
-    the transposed shape (concat_ws skips nulls; the pipeline coalesces to
-    empty arrays before hashing)."""
+    """Null endings with non-null places must not be read as the
+    transposed shape: score_pairs coalesces null arrays to empty ones
+    before they enter the context struct, so b keeps its "house" ending."""
     from osm_wikidata_spark.plans.pipeline import score_pairs
 
     entities = spark.createDataFrame(
@@ -461,8 +461,36 @@ def test_ctx_fp_null_vs_empty_no_alias(spark):
         [("a", "b", "k")], "left_id string, right_id string, block_key string"
     )
     rows = score_pairs(pairs, entities).collect()
-    # b's "house" ending must survive rehydration: the pair merges via trim
+    # b's "house" ending reaches the UDF: the pair merges via trim
     assert len(rows) == 1 and rows[0]["matched"] is True
+
+
+def test_score_pairs_context_never_aliases(spark):
+    """Two entities whose endings join to the same string (one ending
+    "college", U+001E, "house"; two endings "college" and "house") have
+    different contexts, and each pair is scored with its own: only the
+    second trims "house"."""
+    from osm_wikidata_spark.plans.pipeline import score_pairs
+
+    entities = spark.createDataFrame(
+        [
+            ("a", ["Nutbourne"], ["college\x1ehouse"], [], False),
+            ("x", ["Nutbourne House"], [], [], False),
+            ("b", ["Oakway"], ["college", "house"], [], False),
+            ("y", ["Oakway House"], [], [], False),
+        ],
+        "conv_id string, names array<string>, endings array<string>, "
+        "place_names array<string>, is_hamlet boolean",
+    ).cache()
+    pairs = spark.createDataFrame(
+        [("a", "x", "k"), ("b", "y", "k")],
+        "left_id string, right_id string, block_key string",
+    )
+    edges = {
+        (r["left_id"], r["right_id"]): r["matched"]
+        for r in score_pairs(pairs, entities).collect()
+    }
+    assert edges == {("a", "x"): False, ("b", "y"): True}
 
 
 def test_empty_endings_turn_the_global_endings_off(spark):
@@ -572,33 +600,3 @@ def test_pipeline_snm_channel_superset_and_f1(spark):
     truth_map = {r["conv_id"]: r["group_id"] for r in truth.collect()}
     f1 = _pairwise_f1(components, truth_map)
     assert f1 >= 0.99, f"pairwise F1 with SNM {f1:.4f} < 0.99"
-
-
-def test_score_pairs_dedup_paths_are_value_identical(spark):
-    """score_pairs(dedup_names=False) — the unique-names plan (no
-    distinct-set shuffle + join-back) — must produce exactly the same
-    per-pair decisions as the default Zipfian-memo plan.  Pinned on a
-    real synthetic workload with repeated names (so the dedup path's
-    join-back actually fans out) and per-entity context (endings /
-    places / hamlet flags ride both paths)."""
-    from osm_wikidata_spark.operators.blocking import build_blocks, salted_pair_join
-    from osm_wikidata_spark.plans.pipeline import score_pairs
-
-    transcripts, _ = synth_transcripts(spark, n_conversations=60, turns_per_conv=4)
-    entities = extract_entities(transcripts).cache()
-    blocks = build_blocks(entities, "conv_id", "tokens", max_block_size=None)
-    pairs = salted_pair_join(blocks, blocks).filter(
-        F.col("left_id") < F.col("right_id")
-    )
-
-    def rows(dedup):
-        return {
-            (r.left_id, r.right_id, r.matched, r.kind, r.rule)
-            for r in score_pairs(pairs, entities, dedup_names=dedup).collect()
-        }
-
-    with_dedup = rows(True)
-    without = rows(False)
-    assert with_dedup == without
-    assert any(m for (_, _, m, _, _) in with_dedup)  # non-vacuous: matches exist
-    entities.unpersist()
