@@ -17,6 +17,13 @@ in order:
    The one aggregate that finds the hot keys also summarises the kept
    block sizes, so the skew audit and the salted join read that summary
    instead of re-aggregating; with no hot key the cap joins nothing.
+   The cap (:func:`capped_blocks`) takes an index whose ``(block_id,
+   block_key)`` rows are already distinct: :func:`build_blocks`
+   deduplicates for callers that cannot prove it, while
+   ``plans.pipeline.run_pipeline`` explodes token arrays that are
+   distinct per entity (``array_union``) over entity ids that are unique
+   (one ``groupBy`` row each), so a dedup shuffle there would remove
+   nothing.
 2. **salted join** — two-path: only keys whose pair product exceeds
    ``hot_threshold`` are salted (probe side split into ``salt`` sub-keys,
    build side exploded ``salt``-fold); the cold 99% of keys join unsalted,
@@ -49,22 +56,30 @@ def build_blocks(
 ) -> DataFrame:
     """Explode a token-array column into an inverted (block_key, id) index.
 
+    Rows are deduplicated on ``(block_id, block_key)``, so an id that
+    appears twice or a token array that repeats a token gives one row.
     With ``max_block_size``, hot keys are removed *before* the join via an
     **anti**-join against the (small) hot-key list; see
     :func:`capped_blocks`.  Without it the index is returned lazily.
     """
+    blocks = _block_index(df, id_col, tokens_col)
     if max_block_size is None:
-        return _block_index(df, id_col, tokens_col)
-    return capped_blocks(df, id_col, tokens_col, max_block_size)[0]
+        return blocks
+    return capped_blocks(blocks, max_block_size)[0]
 
 
 def capped_blocks(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    max_block_size: int | None,
+    blocks: DataFrame, max_block_size: int | None
 ) -> tuple[DataFrame, dict]:
-    """:func:`build_blocks` plus the size summary of the keys it keeps.
+    """Cap a ``(block_id, block_key)`` index whose rows are distinct, and
+    return it with the size summary of the keys it keeps.
+
+    The caller owns distinctness: the per-key sizes are row counts, so a
+    repeated row would inflate its key's size.  :func:`build_blocks`
+    deduplicates before calling this; a caller whose ids are unique and
+    whose token arrays hold no repeats (``run_pipeline``'s entities)
+    passes a plain ``explode`` and spends no shuffle on a dedup that
+    would remove nothing.
 
     One driver-side aggregate over the per-key sizes returns both the hot
     keys (``block_n > max_block_size``) and the ``BLOCK_SUMMARY`` of the
@@ -75,7 +90,6 @@ def capped_blocks(
     exactly the keys a broadcast of the hot list would, and never the
     keep set, which at 10^12 turns is nearly every distinct token.
     """
-    blocks = _block_index(df, id_col, tokens_col)
     n = F.col("block_n")
     if max_block_size is None:
         kept, hot = n, F.lit(None)

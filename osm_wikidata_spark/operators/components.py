@@ -1,19 +1,29 @@
 """Transitive clustering: connected components over the match-edge DataFrame
 (SURVEY.md §2.5 J8; required by BASELINE.json north_rule).
 
-Two paths, picked by the observed size of the canonical edge set (the row
-count the first checkpoint's ``Observation`` records, so choosing costs no
-job):
+Two paths, picked by the size of the edge set:
 
 * **local** (at most :data:`LOCAL_EDGES` edges): one min-root union-find
-  over the checkpointed edges inside a single Arrow group
-  (``functions/arrow.apply_groups``) — one exchange and one task, however
-  many rounds the star loop would have needed.  Every star round costs
-  four jobs at a fixed ~0.45 s each whatever the data size, so below the
-  bound the per-job cost, not the work, decides the wall time; the bound
-  is sized from a measured crossover (see :data:`LOCAL_EDGES`).
+  inside a single Arrow group (``functions/arrow.apply_groups``) — one
+  exchange and one task, however many rounds the star loop would have
+  needed.  Every star round costs four jobs at a fixed ~0.45 s each
+  whatever the data size, so below the bound the per-job cost, not the
+  work, decides the wall time; the bound is sized from a measured
+  crossover (see :data:`LOCAL_EDGES`).
 * **distributed** (above the bound, the 10^12-edge path): the alternating
   large-star / small-star loop below.
+
+The size comes one of two ways.  Without a caller's bound, the edges are
+canonicalised (oriented, self-loops dropped, deduplicated) and
+checkpointed, and the row count the checkpoint's ``Observation`` records
+picks the path, so choosing costs no job beyond that checkpoint.  A
+caller that has already measured an upper bound on the edge rows
+(``max_edges``, e.g. ``run_pipeline``'s count observed on the edges
+write) and finds it within the bound goes straight to union-find over
+the raw edges minus self-loops: union-find needs neither orientation nor
+dedup, so the canonical shuffle and its checkpoint job are skipped.  The
+bound only picks the path — labels are exact either way — but it caps
+what one Python worker holds, so it must be measured, never guessed.
 
 The distributed path implements the alternating large-star / small-star
 algorithm of Kiveris et al., "Connected Components in MapReduce and
@@ -153,8 +163,9 @@ def _materialise(e: DataFrame) -> tuple[DataFrame, tuple]:
 
 
 def _union_find_kernel(pdf: pd.DataFrame) -> dict:
-    """Label every endpoint of the canonical edges (u < v) in ``pdf`` with
-    its component minimum.
+    """Label every endpoint of the edges (u, v) in ``pdf`` with its
+    component minimum.  Orientation and duplicate edges do not matter;
+    ``pdf`` holds no self-loop and no null endpoint.
 
     ``np.unique`` codes ``u ∪ v`` in Spark's own order (numeric for
     numbers; code-point order for strings, which is UTF-8 byte order), so
@@ -191,7 +202,7 @@ def _union_find_kernel(pdf: pd.DataFrame) -> dict:
 
 
 def _local_labels(e: DataFrame) -> DataFrame:
-    """``(node, component)`` of the checkpointed canonical edges ``e`` from
+    """``(node, component)`` of the edges ``e`` (no self-loop) from
     :func:`_union_find_kernel`, run over all of ``e`` as one Arrow group."""
     t = e.schema["u"].dataType
     schema = StructType([StructField("node", t), StructField("component", t)])
@@ -205,6 +216,7 @@ def connected_components(
     src: str = "left_id",
     dst: str = "right_id",
     max_iterations: int = 30,
+    max_edges: int | None = None,
 ) -> DataFrame:
     """Label every node with the minimum node id of its component.
 
@@ -215,13 +227,21 @@ def connected_components(
     tests, <10) and raises ``RuntimeError`` when the edge set is not a
     fixpoint after ``max_iterations`` rounds: labels read off an
     unconverged edge set would silently split components.
+
+    ``max_edges`` is an upper bound on the rows of ``edges`` that the
+    caller has measured (not guessed: it caps what the one union-find
+    task holds).  At or under :data:`LOCAL_EDGES` the raw edges go
+    straight to union-find, with no canonical dedup and no checkpoint;
+    with ``None`` or above the bound the edges are canonicalised and
+    checkpointed, and their observed count picks the path.
     """
+    uv = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if max_edges is not None and max_edges <= LOCAL_EDGES:
+        return _local_labels(uv.filter(F.col("u") != F.col("v")))
     # ONE action per round: the eager localCheckpoint that materialises
     # the round's edge set also carries the signature Observation, so
     # convergence costs no job of its own (see _materialise).
-    e, sig = _materialise(
-        _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    )
+    e, sig = _materialise(_canonical(uv))
     if sig[0] <= LOCAL_EDGES:
         return _local_labels(e)
     for _ in range(max_iterations):

@@ -3,7 +3,8 @@
 Stages (each checkpointable, each audited):
 
     transcripts ──extract──► entities (conv_id, names[], tokens[])
-        │                        │ explode tokens
+        │                        │ explode tokens (no dedup: ids unique,
+        │                        │ tokens distinct per entity)
         │                        ▼
         │                    blocks (block_key, id)      [hot keys capped]
         │                        │ salted self-join
@@ -12,7 +13,9 @@ Stages (each checkpointable, each audited):
         │                        │ name cross-product → pandas-UDF cascade
         │                        ▼
         │                    edges (matched pairs, kind, rule)
-        │                        │ union-find (≤ 2^20 edges) or
+        │                        │ union-find (≤ 2^20 edges; a durable
+        │                        │ run passes the matched count its
+        │                        │ edges write observed) or
         │                        │ large-star/small-star
         │                        ▼
         └──────────────────► components (conv_id, component)
@@ -38,7 +41,7 @@ from .audit import (
     append_score_rows,
     score_observations,
 )
-from .checkpoint import stage
+from .checkpoint import stage, stage_metrics
 
 _MENTION_PATTERN = r'"([^"]+)"'
 _PLACE_PATTERN = "«([^»]+)»"
@@ -314,6 +317,18 @@ def run_pipeline(
     join runs the plain join when the largest kept block (read from the
     blocks summary, also on resume) proves that no key is hot.
 
+    No stage re-proves what an earlier one guarantees.  The blocks index
+    is a plain explode of ``entities.tokens``: each entity is one
+    ``groupBy("conv_id")`` row and its tokens come out of
+    ``array_union``, so no ``(block_id, block_key)`` row repeats and the
+    cap needs no dedup shuffle (``capped_blocks``).  A durable run's
+    edges write also observes its ``matched`` count, and the components
+    stage passes it to ``connected_components`` as ``max_edges``: at or
+    under ``LOCAL_EDGES`` union-find runs straight over the accepted
+    edges, with no canonical dedup or checkpoint.  A stored edges stage
+    whose sidecar lacks that count is rebuilt once.  Without ``run_dir``
+    nothing is observed and the components stage measures its own input.
+
     ``snm_window`` (opt-in, default off so existing runs are byte-stable)
     unions a sorted-neighborhood channel over each entity's primary name
     into the candidate set: the token/full-name/acronym channels miss
@@ -359,7 +374,10 @@ def run_pipeline(
     block_summary: dict = {}
 
     def _blocks() -> DataFrame:
-        frame, summary = capped_blocks(entities, "conv_id", "tokens", max_block_size)
+        index = entities.select(
+            F.col("conv_id").alias("block_id"), F.explode("tokens").alias("block_key")
+        )
+        frame, summary = capped_blocks(index, max_block_size)
         block_summary.update(summary)
         return frame
 
@@ -424,14 +442,17 @@ def run_pipeline(
         "edges",
         lambda: score_pairs(pairs, entities, endings),
         params=edge_params,
-        observe=score_observations(),
+        observe={**score_observations(), "matched": F.count_if("matched")},
     )
     append_partition_rows(run_dir, run_id, "edges")
     append_score_rows(run_dir, run_id, "edges")
+    matched = stage_metrics(run_dir, "edges")["matched"] if run_dir else None
 
     def _components() -> DataFrame:
         accepted = edges.filter(F.col("matched"))
-        labels = connected_components(accepted, "left_id", "right_id")
+        labels = connected_components(
+            accepted, "left_id", "right_id", max_edges=matched
+        )
         # singletons: conversations with no accepted edge
         return (
             entities.select(F.col("conv_id"))

@@ -2,8 +2,9 @@
 ``partitions``/``scores``/``blocks`` rows agree with the Spark-side
 helpers, audit tables mixing Spark- and pyarrow-written files read with one
 schema, a kind outside the cascade's enum fails loudly, a resume launches
-no job, and a durable run's entities, pairs and edges stages keep their
-job counts."""
+no job, the edges sidecar's matched count is the stage's, and a durable
+run's entities, blocks, pairs, edges and components stages keep their job
+counts."""
 
 from __future__ import annotations
 
@@ -22,7 +23,7 @@ from osm_wikidata_spark.plans.audit import (
     score_distribution,
     score_observations,
 )
-from osm_wikidata_spark.plans.checkpoint import stage
+from osm_wikidata_spark.plans.checkpoint import stage, stage_metrics
 from osm_wikidata_spark.plans.pipeline import run_pipeline
 from osm_wikidata_spark.sources.transcripts import synth_transcripts
 from tests.jobcount import jobs_in_group
@@ -133,6 +134,49 @@ def test_edge_kind_outside_enum_raises(spark, tmp_path):
     assert not os.path.exists(os.path.join(run_dir, "audit", "scores"))
 
 
+def test_edges_sidecar_matched_equals_count(spark, finished_run, tmp_path):
+    """The matched count the edges write observes is the count the
+    components stage trusts as union-find's bound: it equals a count of
+    the stored edges, also when the cap leaves no edge."""
+    transcripts, run_dir, out = finished_run
+    matched = stage_metrics(run_dir, "edges")["matched"]
+    assert matched == out["edges"].filter("matched").count() > 0
+    empty_dir = str(tmp_path / "run")
+    empty = run_pipeline(
+        spark, transcripts, run_dir=empty_dir, run_id="empty", max_block_size=0
+    )
+    assert stage_metrics(empty_dir, "edges")["matched"] == 0
+    assert empty["edges"].filter("matched").count() == 0
+
+
+def test_edges_sidecar_without_matched_rebuilds_once(spark, finished_run, tmp_path):
+    """A run_dir whose edges sidecar predates the matched count rebuilds
+    the edges stage once, to identical output, and reuses pairs; the next
+    resume launches no job."""
+    transcripts, finished, out = finished_run
+    run_dir = str(tmp_path / "run")
+    shutil.copytree(finished, run_dir)
+    sidecar = os.path.join(run_dir, "edges", "_STAGE_METRICS.json")
+    with open(sidecar) as f:
+        record = json.load(f)
+    matched = record["metrics"].pop("matched")
+    with open(sidecar, "w") as f:
+        json.dump(record, f)
+    pairs_success = os.path.join(run_dir, "pairs", "_SUCCESS")
+    pairs_mtime = os.path.getmtime(pairs_success)
+    again = run_pipeline(spark, transcripts, run_dir=run_dir, run_id="legacy")
+    assert stage_metrics(run_dir, "edges")["matched"] == matched
+    assert os.path.getmtime(pairs_success) == pairs_mtime
+    assert sorted(again["edges"].collect()) == sorted(out["edges"].collect())
+    assert sorted(again["components"].collect()) == sorted(out["components"].collect())
+    resume = jobs_in_group(
+        spark,
+        "test-audit-matched-resume",
+        lambda: run_pipeline(spark, transcripts, run_dir=run_dir, run_id="again"),
+    )
+    assert resume == 0
+
+
 def test_resume_launches_no_job(spark, finished_run):
     """Re-running over a finished run_dir reads every stage and audits it
     from its files and sidecars: no Spark job at all."""
@@ -173,10 +217,14 @@ def test_blocks_sidecar_without_summary_rebuilds(spark, finished_run, tmp_path):
 
 def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatch):
     """A durable run's entities stage is one aggregate plus its write (2
-    jobs); with no key hot its pairs stage is the plain join, the pair
+    jobs).  Its blocks stage explodes the entities' tokens with no dedup,
+    so the cap's size aggregate and the write run no dedup exchange (4
+    jobs).  With no key hot its pairs stage is the plain join, the pair
     dedup and the write (3 jobs).  The edges stage carries each entity's
     context on the entity joins, so no context table is built and
-    broadcast beside them (8 jobs)."""
+    broadcast beside them (8 jobs).  The components stage passes the
+    matched count the edges write observed to connected_components, so
+    union-find runs with no canonical dedup or checkpoint (3 jobs)."""
     from osm_wikidata_spark.plans import pipeline
 
     real_stage = pipeline.stage
@@ -199,5 +247,7 @@ def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatc
     monkeypatch.setattr(pipeline, "stage", counted_stage)
     pipeline.run_pipeline(spark, stored, run_dir=str(tmp_path / "run"), run_id="jobs")
     assert jobs["entities"] <= 2
+    assert jobs["blocks"] <= 4
     assert jobs["pairs"] <= 3
     assert jobs["edges"] <= 8
+    assert jobs["components"] <= 3

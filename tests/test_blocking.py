@@ -104,7 +104,7 @@ def test_capped_blocks_summary_equals_block_skew_metrics(spark, cap):
     no key over the cap nothing is anti-joined."""
     rows = [(f"r{i:03d}", ["hot", f"cold{i % 7}", f"uniq{i}"]) for i in range(30)]
     df = spark.createDataFrame(rows, "id string, tokens array<string>")
-    blocks, summary = capped_blocks(df, "id", "tokens", cap)
+    blocks, summary = capped_blocks(build_blocks(df, "id", "tokens"), cap)
     want = block_skew_metrics(blocks, "r").first()
     assert summary == {k: want[k] for k in BLOCK_SUMMARY}
     plan = blocks._jdf.queryExecution().optimizedPlan().toString()

@@ -184,6 +184,18 @@ _DEGENERATE = {
 }
 
 
+def _check_matrix_case(spark, id_type, case, measured=False):
+    edges = _DEGENERATE[case]
+    if id_type == "string":
+        edges = [(str(a), str(b)) for a, b in edges]
+    df = spark.createDataFrame(edges, f"left_id {id_type}, right_id {id_type}")
+    max_edges = len(edges) if measured else None
+    rows = connected_components(df, max_edges=max_edges).collect()
+    got = {r["node"]: r["component"] for r in rows}
+    assert len(rows) == len(got)  # one label per node
+    assert got == _oracle(edges)
+
+
 @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
 @pytest.mark.parametrize("case", sorted(_DEGENERATE))
 def test_id_types_and_degenerate_inputs(spark, id_type, case):
@@ -191,14 +203,7 @@ def test_id_types_and_degenerate_inputs(spark, id_type, case):
     fixpoint loop (nothing to converge, one round, a high-degree star
     attached to a long chain, redundant edges).  String ids are the
     decimal text, so their order differs from the numeric one."""
-    edges = _DEGENERATE[case]
-    if id_type == "string":
-        edges = [(str(a), str(b)) for a, b in edges]
-    df = spark.createDataFrame(edges, f"left_id {id_type}, right_id {id_type}")
-    rows = connected_components(df).collect()
-    got = {r["node"]: r["component"] for r in rows}
-    assert len(rows) == len(got)  # one label per node
-    assert got == _oracle(edges)
+    _check_matrix_case(spark, id_type, case)
 
 
 @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
@@ -208,18 +213,26 @@ def test_id_types_and_degenerate_inputs_distributed(spark, monkeypatch, id_type,
     down the local path); -1 sends even the empty edge set through the
     loop."""
     monkeypatch.setattr(components, "LOCAL_EDGES", -1)
-    test_id_types_and_degenerate_inputs(spark, id_type, case)
+    _check_matrix_case(spark, id_type, case)
 
 
-@pytest.mark.parametrize(
-    "local_edges", [components.LOCAL_EDGES, -1], ids=["local", "distributed"]
-)
-def test_string_ids_order_as_spark_does(spark, monkeypatch, local_edges):
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+def test_id_types_and_degenerate_inputs_measured(spark, id_type, case):
+    """The same matrix with the caller's measured edge count as
+    ``max_edges``: the raw edges reach union-find without the canonical
+    dedup, so duplicates, reversed edges and self-loops reach it too."""
+    _check_matrix_case(spark, id_type, case, measured=True)
+
+
+@pytest.mark.parametrize("path", ["local", "distributed", "measured"])
+def test_string_ids_order_as_spark_does(spark, monkeypatch, path):
     """Component minima of string ids follow Spark's UTF-8 byte order,
     which is code-point order: "\\uffff" < "\\U00010000" (UTF-16 would
     invert them), "z" < "é" and "a" < "a\\x00" (a C-string hash would
     merge those two)."""
-    monkeypatch.setattr(components, "LOCAL_EDGES", local_edges)
+    if path == "distributed":
+        monkeypatch.setattr(components, "LOCAL_EDGES", -1)
     edges = [
         ("\U00010000", "\uffff"),
         ("é", "z"),
@@ -229,7 +242,11 @@ def test_string_ids_order_as_spark_does(spark, monkeypatch, local_edges):
         ("ÿ", "\x7f"),
     ]
     df = spark.createDataFrame(edges, "left_id string, right_id string")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    max_edges = len(edges) if path == "measured" else None
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(df, max_edges=max_edges).collect()
+    }
     assert got == _oracle(edges)
 
 
@@ -269,6 +286,35 @@ def test_chain_probe_job_count_local(spark):
 
     assert jobs_in_group(spark, "cc-chain-probe-local", run) <= 4
     assert got["labels"].select("component").distinct().count() == 150
+
+
+def test_chain_probe_job_count_measured(spark):
+    """With a measured ``max_edges`` within LOCAL_EDGES the chain probe
+    skips the canonical exchange and its checkpoint: the one-group
+    exchange and the noop write, 2 jobs.  A bound above LOCAL_EDGES takes
+    the checkpointed path, whose observed count then picks union-find:
+    the local path's 4 jobs."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 1499) if (i + 1) % 10 != 0],
+        "left_id bigint, right_id bigint",
+    )
+    n = edges.count()
+
+    def jobs(group, max_edges):
+        got = {}
+
+        def run():
+            got["labels"] = connected_components(edges, max_edges=max_edges)
+            got["labels"].write.format("noop").mode("overwrite").save()
+
+        count = jobs_in_group(spark, group, run)
+        assert got["labels"].select("component").distinct().count() == 150
+        return count
+
+    measured = jobs("cc-chain-probe-measured", n)
+    above = jobs("cc-chain-probe-above-bound", components.LOCAL_EDGES + 1)
+    assert measured <= 2
+    assert above >= measured + 2
 
 
 def test_no_separate_signature_action():
@@ -312,9 +358,10 @@ def test_pipeline_components_stage_job_count(spark, tmp_path, monkeypatch):
 
 
 def test_pipeline_components_stage_job_count_local(spark, tmp_path, monkeypatch):
-    """On the local path the same stage costs 2 jobs for the canonical
-    input, then the one-group exchange that runs the union-find task, the
-    singleton join and the write: 5 jobs."""
+    """On the local path the same stage passes the matched count its
+    edges write observed as ``max_edges``, so it skips the canonical
+    input's dedup and checkpoint: the one-group exchange that runs the
+    union-find task, the singleton join and the write, 3 jobs."""
     from osm_wikidata_spark.plans import pipeline
     from osm_wikidata_spark.sources.transcripts import synth_transcripts
 
@@ -335,4 +382,4 @@ def test_pipeline_components_stage_job_count_local(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(pipeline, "stage", counted_stage)
     transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
     pipeline.run_pipeline(spark, transcripts, run_dir=str(tmp_path / "run"), run_id="jobs")
-    assert jobs["components"] <= 5
+    assert jobs["components"] <= 3

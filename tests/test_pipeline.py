@@ -11,7 +11,11 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from osm_wikidata_spark.operators.blocking import capped_blocks, salted_pair_join
+from osm_wikidata_spark.operators.blocking import (
+    build_blocks,
+    capped_blocks,
+    salted_pair_join,
+)
 from osm_wikidata_spark.plans.checkpoint import completed_stages
 from osm_wikidata_spark.plans.pipeline import extract_entities, run_pipeline
 from osm_wikidata_spark.sources.transcripts import synth_transcripts
@@ -171,6 +175,43 @@ def test_entity_extraction_equals_per_mention_oracle(spark):
     assert _entity_rows(extract_entities(synthetic)) == _entity_rows(_entities_oracle(synthetic))
 
 
+def test_pipeline_blocks_need_no_dedup(spark, tmp_path):
+    """run_pipeline's blocks stage explodes entity tokens with no
+    ``(block_id, block_key)`` dedup.  Its premise, on mentions repeated
+    and case-varied within a conversation, two names of one conversation
+    sharing a token, null text and a cap that drops one hot key: the
+    stored index has no repeated row and equals the deduplicating
+    ``build_blocks`` over the same entities."""
+    rows = [
+        ("c-dup", 0, "user", 'We saw "Grand Hall" and "grand hall".', None, None),
+        ("c-dup", 1, "user", None, None, None),
+        ("c-dup", 2, "user", '"GRAND HALL" again, and "Grand Hall".', None, None),
+        ("c-share", 0, "user", 'Between "Old Mill Inn" and "Old Mill".', None, None),
+        ("c-share", 1, "user", None, None, None),
+        ("c-null", 0, "user", None, None, None),
+    ]
+    rows += [
+        (f"c-hot{i}", 0, "user", f'At "{w} Chapel".', None, None)
+        for i, w in enumerate(["Alder", "Birch", "Cedar", "Elm", "Fir"])
+    ]
+    transcripts = spark.createDataFrame(rows, _TRANSCRIPT_SCHEMA)
+    cap = 4
+    out = run_pipeline(spark, transcripts, run_dir=str(tmp_path / "run"), max_block_size=cap)
+    stored = [tuple(r) for r in out["blocks"].select("block_id", "block_key").collect()]
+    assert len(stored) == len(set(stored))
+    want = build_blocks(out["entities"], "conv_id", "tokens", cap)
+    assert sorted(stored) == sorted(
+        tuple(r) for r in want.select("block_id", "block_key").collect()
+    )
+    # the premise is exercised: repeated tokens across names, one hot key
+    uncapped = build_blocks(out["entities"], "conv_id", "tokens")
+    assert {r["block_key"] for r in uncapped.collect()} - {k for _, k in stored} == {
+        "chapel"
+    }
+    (c_dup,) = out["entities"].filter(F.col("conv_id") == "c-dup").collect()
+    assert len(c_dup["names"]) == 3
+
+
 def test_pipeline_salts_a_block_over_256_rows(spark, monkeypatch):
     """A block of 300 rows has 300² pairs, over the salted join's
     threshold: the pairs stage keeps the pinned salted hot path.  A block
@@ -211,7 +252,7 @@ def test_score_pairs_join_back_is_sort_merge(spark):
 
     transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
     entities = extract_entities(transcripts).localCheckpoint()
-    blocks, _ = capped_blocks(entities, "conv_id", "tokens", 1000)
+    blocks, _ = capped_blocks(build_blocks(entities, "conv_id", "tokens"), 1000)
     pairs = salted_pair_join(blocks, blocks).filter(F.col("left_id") < F.col("right_id"))
     edges = score_pairs(pairs, entities)
     assert edges.collect()
