@@ -919,7 +919,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_monge_elkan(spark, sf):
         # Monge-Elkan (KDD'96): mean best-JW per left token — the
-        # unweighted ancestor of SoftTFIDF; one Arrow node, rest JVM
+        # unweighted ancestor of SoftTFIDF; each pair row is scored from
+        # its own two names in one Arrow node (no token explode or
+        # exchange), rounded JVM-side
         from osm_wikidata_spark.operators.scoring import monge_elkan
 
         return monge_elkan(_part_name_pairs(spark, sf)).select(

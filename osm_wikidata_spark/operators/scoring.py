@@ -26,6 +26,9 @@ express, Arrow batches for the rest):
   on the all-ASCII part-name corpus; DuckDB itself is byte-oriented so
   non-ASCII comparisons legitimately diverge — ours is the
   codepoint-correct one).
+* ``idf_token_overlap`` / ``soft_tfidf`` join a corpus idf dim per token,
+  so their tokens explode JVM-side.  ``monge_elkan`` needs one row's two
+  names alone: one scalar pandas UDF scores each row, with no exchange.
 
 Oracle notes: all three scores are rounded to 6 dp with ``F.round``
 (HALF_UP, matching DuckDB ``round``); q_pair_scores compares every pair of
@@ -34,6 +37,8 @@ the sf corpus against DuckDB's native ``levenshtein`` /
 """
 
 from __future__ import annotations
+
+import functools
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -167,6 +172,20 @@ def quote_sep(sep: str) -> str:
     return "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
 
 
+def _tokens(col: str | F.Column, sep: str) -> F.Column:
+    """The distinct non-empty tokens of ``col`` split on the LITERAL
+    ``sep``, in first-seen order — the JVM tokeniser of every token scorer
+    here."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.array_distinct(F.filter(F.split(c, quote_sep(sep)), lambda t: t != ""))
+
+
+def split_tokens(name: str, sep: str = " ") -> list[str]:
+    """The tokens :func:`_tokens` gives, in Python (empty ``sep``: chars)."""
+    parts = name.split(sep) if sep else list(name)
+    return list(dict.fromkeys(t for t in parts if t))
+
+
 def token_set_overlap(
     left: str | F.Column, right: str | F.Column, sep: str = " "
 ) -> F.Column:
@@ -178,10 +197,7 @@ def token_set_overlap(
     separator (regex-quoted internally — ``sep='.'`` splits on dots, not
     on every character).
     """
-    lc = F.col(left) if isinstance(left, str) else left
-    rc = F.col(right) if isinstance(right, str) else right
-    lt = F.array_distinct(F.filter(F.split(lc, quote_sep(sep)), lambda t: t != ""))
-    rt = F.array_distinct(F.filter(F.split(rc, quote_sep(sep)), lambda t: t != ""))
+    lt, rt = _tokens(left, sep), _tokens(right, sep)
     smaller = F.least(F.size(lt), F.size(rt))
     return F.when(smaller == 0, F.lit(0.0)).otherwise(
         F.size(F.array_intersect(lt, rt)).cast("double") / smaller
@@ -203,13 +219,7 @@ def token_idf_dim(
     MB even web-scale) and falls back if a pathological corpus explodes
     the token space.
     """
-    tokens = docs.select(
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.col(text_col), quote_sep(sep)), lambda t: t != "")
-            )
-        ).alias("token")
-    )
+    tokens = docs.select(F.explode(_tokens(text_col, sep)).alias("token"))
     df_counts = tokens.groupBy("token").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
     return df_counts.crossJoin(F.broadcast(n)).select(
@@ -266,18 +276,12 @@ def idf_token_overlap(
     """
     cols = list(pairs.columns)
     uniq = pairs.dropDuplicates(cols)
-
-    def _toks(c: str) -> F.Column:
-        return F.array_distinct(
-            F.filter(F.split(F.col(c), quote_sep(sep)), lambda t: t != "")
-        )
-
     # explode_outer: a pair with no shared tokens still emits one
     # null-token row, so every distinct input row reaches the output
     exploded = uniq.select(
         *cols,
         F.explode_outer(
-            F.array_intersect(_toks(left_col), _toks(right_col))
+            F.array_intersect(_tokens(left_col, sep), _tokens(right_col, sep))
         ).alias("token"),
     )
     joined = exploded.join(idf_dim, "token", "left")
@@ -286,16 +290,7 @@ def idf_token_overlap(
     nums = joined.groupBy(*cols).agg(F.sum(contrib).alias("_num"))
 
     def _sum_dim(names: DataFrame, out: str) -> DataFrame:
-        g = names.select(
-            "_nm",
-            F.explode_outer(
-                F.array_distinct(
-                    F.filter(
-                        F.split(F.col("_nm"), quote_sep(sep)), lambda t: t != ""
-                    )
-                )
-            ).alias("token"),
-        )
+        g = names.select("_nm", F.explode_outer(_tokens("_nm", sep)).alias("token"))
         j = g.join(idf_dim, "token", "left")
         _ii = F.coalesce(F.col("idf"), F.lit(float(default_idf)))
         s = F.when(F.col("token").isNotNull(), _ii).otherwise(F.lit(0.0))
@@ -387,13 +382,8 @@ def soft_tfidf(
     cols = list(pairs.columns)
     uniq = pairs.dropDuplicates(cols)
 
-    def _toks(c: str) -> F.Column:
-        return F.array_distinct(
-            F.filter(F.split(F.col(c), quote_sep(sep)), lambda t: t != "")
-        )
-
     def _side(col: str, tok: str, w: str) -> DataFrame:
-        side = uniq.select(*cols, F.explode(_toks(col)).alias(tok))
+        side = uniq.select(*cols, F.explode(_tokens(col, sep)).alias(tok))
         return side.join(
             idf_dim.withColumnRenamed("token", tok), tok, "left"
         ).withColumn(w, F.coalesce(F.col("idf"), F.lit(float(default_idf)))).drop(
@@ -449,6 +439,23 @@ def soft_tfidf(
     )
 
 
+def monge_elkan_score(
+    s: str | None, t: str | None, sep: str = " ", jw=jaro_winkler
+) -> float:
+    """Unrounded ``ME(s, t)``: the mean, in left token order, of each left
+    token's best ``jw`` among the right tokens (:func:`split_tokens`).  A
+    null name, or a side with no tokens, scores 0.0."""
+    if not isinstance(s, str) or not isinstance(t, str):
+        return 0.0
+    lt, rt = split_tokens(s, sep), split_tokens(t, sep)
+    if not lt or not rt:
+        return 0.0
+    total = 0.0  # summed in order, as Spark's avg sums
+    for w in lt:
+        total += max(jw(w, v) for v in rt)
+    return total / len(lt)
+
+
 def monge_elkan(
     pairs: DataFrame,
     left_col: str = "left_name",
@@ -464,37 +471,28 @@ def monge_elkan(
 
     ``ME(S,T) = (1/|S|) Σ_{w∈S} max_{v∈T} jw(w, v)``
 
-    Pairs whose either side tokenises to the empty set score 0.0.  Same
-    plan skeleton as :func:`soft_tfidf` minus the idf dim and norms: two
-    bounded token explodes, ONE ArrowEvalPython (token-level JW, max memo
-    hit rate), per-(pair, token) max then per-pair mean — all JVM.
+    A score depends on its row's two names alone: one scalar pandas UDF
+    runs :func:`monge_elkan_score` per row with a token-pair JW memo per
+    Arrow batch, so the plan is one ArrowEvalPython and no exchange, and
+    only the two name columns cross into Python.  The UDF returns the
+    UNROUNDED mean and ``F.round`` (HALF_UP) rounds it JVM-side: means of
+    per-token-rounded JW land on exact decimal halves, where Spark and
+    DuckDB round differently.
+
+    One output row per input row, columns ``[*pairs.columns, out_col]``.
+    A null name, or a side with no tokens, scores 0.0; a null in another
+    column does not change the score (the earlier join back on all
+    columns scored such a row 0.0).
     """
-    cols = list(pairs.columns)
 
-    def _toks(c: str) -> F.Column:
-        return F.array_distinct(
-            F.filter(F.split(F.col(c), quote_sep(sep)), lambda t: t != "")
-        )
+    @F.pandas_udf(DoubleType())
+    def _me(left: pd.Series, right: pd.Series) -> pd.Series:
+        jw = functools.lru_cache(maxsize=None)(jaro_winkler)
+        out = [monge_elkan_score(a, b, sep, jw) for a, b in zip(left, right)]
+        return pd.Series(out, dtype="float64")
 
-    lt = pairs.select(*cols, F.explode(_toks(left_col)).alias("_lt"))
-    rt = pairs.select(*cols, F.explode(_toks(right_col)).alias("_rt"))
-    # jw stays UNROUNDED through max and mean: rounding per token makes
-    # the mean of 6dp multiples land on exact decimal halves (x.xxxxxx5),
-    # where Spark (binary-expansion HALF_UP) and DuckDB (decimal-repr
-    # rounding) disagree — 12/1639 pairs flipped at sf0.01 before this.
-    # The kernel is bit-identical to DuckDB's on ASCII, so max/mean over
-    # raw doubles agree, and a raw mean almost never hits a decimal half.
-    best = (
-        lt.join(rt, cols)
-        .withColumn("_jw", jaro_winkler_udf(F.col("_lt"), F.col("_rt")))
-        .groupBy(*cols, "_lt")
-        .agg(F.max("_jw").alias("_best"))
-    )
-    per_pair = best.groupBy(*cols).agg(F.avg("_best").alias("_me"))
-    return pairs.join(per_pair, cols, "left").select(
-        *cols,
-        F.round(F.coalesce(F.col("_me"), F.lit(0.0)), precision).alias(out_col),
-    )
+    score = F.round(_me(F.col(left_col), F.col(right_col)), precision)
+    return pairs.select(*pairs.columns, score.alias(out_col))
 
 
 def damerau_levenshtein(s1: str, s2: str) -> int:

@@ -91,3 +91,75 @@ def test_missing_metrics_sidecar_rebuilds(spark, tmp_path):
     assert calls["n"] == 2
     assert sorted(again.collect()) == first
     assert completed_stages(run_dir) == ["s1"]
+
+
+_RETRY_RUN = r"""
+import json, os, sys
+
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+
+from osm_wikidata_spark.plans.checkpoint import stage, stage_metrics
+from osm_wikidata_spark.session import build_session
+
+run_dir = sys.argv[1]
+marker = os.path.join(run_dir, "failed_attempts")
+spark = build_session(master="local[2,2]", shuffle_partitions=4)
+
+
+@F.pandas_udf("boolean")
+def even(ids: pd.Series) -> pd.Series:
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        with open(marker, "a") as f:
+            f.write("x")
+        raise RuntimeError("forced failure of the first attempt")
+    return ids % 2 == 0
+
+
+def build():
+    return spark.range(0, 1000, 1, 4).select("id", even("id").alias("matched"))
+
+
+out = stage(spark, run_dir, "edges", build, observe={"matched": F.count_if("matched")})
+with open(marker) as f:
+    failed_attempts = len(f.read())
+print("RESULT " + json.dumps({
+    "observed": stage_metrics(run_dir, "edges"),
+    "rows": out.count(),
+    "matched": out.filter("matched").count(),
+    "failed_attempts": failed_attempts,
+}))
+"""
+
+
+def test_observed_counts_survive_a_task_retry(tmp_path):
+    """The write's ``Observation`` counts each row once when a task fails
+    and is retried: ``run_pipeline`` picks the CC path from the edges
+    stage's observed ``matched`` count.  Runs in its own ``local[2,2]``
+    session (one retry allowed), where the first attempt of partition 0
+    raises inside a pandas UDF."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_RUN, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    line = next(x for x in proc.stdout.splitlines() if x.startswith("RESULT "))
+    got = json.loads(line[len("RESULT "):])
+    assert got["failed_attempts"] == 1
+    assert got["rows"] == 1000 and got["matched"] == 500
+    assert got["observed"] == {"rows": 1000, "matched": 500}

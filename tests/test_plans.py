@@ -422,6 +422,36 @@ def test_soft_tfidf_single_arrow_node(spark):
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, flags=re.M)) == 1, plan
 
 
+def _name_pairs(spark):
+    return spark.createDataFrame(
+        [(1, 2, "red lion inn", "red lion"), (3, 4, "white hart", None)],
+        "left_id int, right_id int, left_name string, right_name string",
+    )
+
+
+def test_monge_elkan_is_one_arrow_node_without_exchange(spark):
+    """Monge-Elkan scores each row from its own two names: one
+    ArrowEvalPython over the name columns and no shuffle."""
+    import re
+
+    from osm_wikidata_spark.operators.scoring import monge_elkan
+
+    plan = _formatted_plan(monge_elkan(_name_pairs(spark)))
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, flags=re.M)) == 1, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_monge_elkan_checkpoint_is_one_job(spark):
+    from osm_wikidata_spark.operators.scoring import monge_elkan
+    from tests.jobcount import jobs_in_group
+
+    scored = monge_elkan(_name_pairs(spark))
+    jobs = jobs_in_group(
+        spark, "monge-elkan-checkpoint", lambda: scored.localCheckpoint(eager=True)
+    )
+    assert jobs == 1
+
+
 def test_salted_hot_path_parallelism_is_pinned(spark):
     """The salted hot-path join must carry a REPARTITION_BY_NUM exchange
     on (block_key, salt): without it, AQE partition coalescing — which

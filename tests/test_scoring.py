@@ -341,6 +341,113 @@ def test_monge_elkan_asymmetry(spark):
     assert r < f                    # extra left tokens drag the mean down
 
 
+_ME_SCHEMA = "left_id int, right_id int, left_name string, right_name string"
+
+
+def test_monge_elkan_null_names_score_zero(spark):
+    from osm_wikidata_spark.operators.scoring import monge_elkan
+
+    pairs = spark.createDataFrame(
+        [(1, 2, None, "alpha"), (3, 4, "alpha", None), (5, 6, None, None)],
+        _ME_SCHEMA,
+    )
+    got = {r["left_id"]: r["monge_elkan"] for r in monge_elkan(pairs).collect()}
+    assert got == {1: 0.0, 3: 0.0, 5: 0.0}
+
+
+def test_monge_elkan_null_id_scores_its_names(spark):
+    """A null outside the name columns leaves the score to the names (the
+    former join back on every column scored such a row 0.0)."""
+    from osm_wikidata_spark.operators.scoring import jaro_winkler, monge_elkan
+
+    pairs = spark.createDataFrame(
+        [(None, 2, "alpha beta", "alpha beta"), (1, None, "alpha", "alpah")],
+        _ME_SCHEMA,
+    )
+    got = {r["left_name"]: r["monge_elkan"] for r in monge_elkan(pairs).collect()}
+    assert got["alpha beta"] == 1.0
+    assert got["alpha"] == round(jaro_winkler("alpha", "alpah"), 6) > 0.0
+
+
+def test_monge_elkan_duplicate_rows_each_kept(spark):
+    from osm_wikidata_spark.operators.scoring import monge_elkan
+
+    row = (1, 2, "red lion", "red lion inn")
+    pairs = spark.createDataFrame([row, row, row, (3, 4, "zz", "qq")], _ME_SCHEMA)
+    out = monge_elkan(pairs).collect()
+    assert len(out) == 4
+    assert [r["monge_elkan"] for r in out if r["left_id"] == 1] == [1.0] * 3
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint", "string"])
+def test_monge_elkan_id_types_and_passthrough(spark, id_type):
+    """Every non-name column, of any type, comes through unchanged and in
+    place; the score is appended last."""
+    import datetime
+
+    from osm_wikidata_spark.operators.scoring import monge_elkan
+
+    ids = ["7", "8"] if id_type == "string" else [7, 8]
+    ts = datetime.datetime(2024, 5, 6, 7, 8, 9)
+    pairs = spark.createDataFrame(
+        [(ids[0], "alpha beta", ids[1], "alpha", ["x", None], ts)],
+        f"left_id {id_type}, left_name string, right_id {id_type}, "
+        "right_name string, tags array<string>, seen timestamp",
+    )
+    out = monge_elkan(pairs)
+    assert out.columns == [*pairs.columns, "monge_elkan"]
+    assert out.schema.fields[:-1] == pairs.schema.fields
+    (got,) = out.collect()
+    assert tuple(got)[:-1] == tuple(pairs.collect()[0])
+    assert 0.5 < got["monge_elkan"] < 1.0
+
+
+def test_monge_elkan_literal_separators_match_jvm_tokens(spark):
+    """The Python tokeniser must give the tokens the JVM tokeniser
+    (``F.split`` on ``quote_sep(sep)``) gives — regex metacharacters, a
+    multi-char separator holding ``\\E``, leading, trailing and repeated
+    separators, and the empty separator (characters) — and the score must
+    be the mean over those JVM token arrays."""
+    from osm_wikidata_spark.operators.scoring import (
+        _tokens,
+        jaro_winkler,
+        monge_elkan,
+        split_tokens,
+    )
+
+    for sep in ["|", ".", "a\\Eb", "\\E", "||", " ", ""]:
+        names = [
+            (f"{sep}alpha{sep}{sep}beta{sep}alpha{sep}", f"alpah{sep}{sep}gamma"),
+            (f"x.y|z{sep}w*q", f"{sep}{sep}x.y|z{sep}"),
+            ("plain", sep * 3),
+        ]
+        pairs = spark.createDataFrame(
+            [(i, i, left, right) for i, (left, right) in enumerate(names)], _ME_SCHEMA
+        )
+        rows = (
+            monge_elkan(pairs, sep=sep)
+            .select(
+                "left_name",
+                "right_name",
+                "monge_elkan",
+                _tokens("left_name", sep).alias("lt"),
+                _tokens("right_name", sep).alias("rt"),
+            )
+            .collect()
+        )
+        assert len(rows) == len(names)
+        for row in rows:
+            lt, rt = list(row["lt"]), list(row["rt"])
+            assert split_tokens(row["left_name"], sep) == lt, (sep, row)
+            assert split_tokens(row["right_name"], sep) == rt, (sep, row)
+            want = (
+                sum(max(jaro_winkler(w, v) for v in rt) for w in lt) / len(lt)
+                if lt and rt
+                else 0.0
+            )
+            assert row["monge_elkan"] == pytest.approx(want, abs=1e-6), (sep, row)
+
+
 def test_soft_tfidf_and_monge_elkan_differential(spark):
     """Differential check vs an independent pure-Python replica over a
     randomized corpus (seeded): pins the argmax/norm algebra beyond the
