@@ -2,10 +2,11 @@
 
 The input contract (BASELINE.json input_hint) forbids per-row Python UDFs:
 everything here is a pandas UDF, so rows cross the JVM/Python boundary in
-Arrow record batches.  Inside a batch we apply the kernel per *distinct*
-input (``drop_duplicates`` + merge), which collapses the Zipfian repetition
-of real name data — the same trick the reference uses with its per-item memo
-cache (`/root/reference/matcher/match.py:1029-1048`), but batch-wide.
+Arrow record batches.  Inside a batch we apply the kernel once per
+*distinct* input (a dict memo, or ``drop_duplicates`` + map), which
+collapses the Zipfian repetition of real name data — the same trick the
+reference uses with its per-item memo cache (match.py:1029-1048), but
+batch-wide.
 """
 
 from __future__ import annotations
@@ -96,19 +97,23 @@ def _strip_house(endings: tuple | None, item_is_hamlet: bool) -> tuple | None:
 
 @F.pandas_udf(DECISION_SCHEMA)
 def pair_decision_udf(
-    left: pd.Series,
-    right: pd.Series,
+    left_names: pd.Series,
+    right_names: pd.Series,
     endings: pd.Series,
     places: pd.Series,
     left_hamlet: pd.Series,
     right_hamlet: pd.Series,
 ) -> pd.DataFrame:
-    """Symmetric pair decision in ONE UDF call: try (left, right), fall
-    back to (right, left).  The cascade is asymmetric (record-side-only
-    retries like drop_initials, match.py:688-693), so symmetric workloads
-    need both directions — evaluating them inside one call halves the
-    Arrow transfers and Python invocations of two separate UDFs, and the
-    reverse direction short-circuits when the forward one matched.
+    """One candidate pair's decision over its whole name cross-product:
+    every left name is crossed with every right name, and a null name
+    never matches.  ``matched`` is the OR over the crossings; ``kind`` and
+    ``rule`` are each the minimum over the matched crossings, taken
+    separately, so the two may come from different crossings.
+
+    Each crossing is symmetric: try (l, r), fall back to (r, l).  The
+    cascade is asymmetric (record-side-only retries like drop_initials,
+    match.py:688-693), so symmetric workloads need both directions, and
+    the reverse direction short-circuits when the forward one matched.
 
     The house-trim gate is PER-DIRECTION, mirroring the reference's
     per-item ``trim_house=not item.is_hamlet()`` (matcher.py:1036-1046):
@@ -117,37 +122,39 @@ def pair_decision_udf(
     ``left_hamlet``.  A hamlet paired with a non-hamlet "X House" entity
     can therefore still merge via the direction whose item side is the
     non-hamlet — a pair-level either-side fold would lose that asymmetry.
+
+    Crossings are memoised on ``(l, r, endings, places, lh, rh)`` for one
+    Arrow batch, the batch-wide form of the reference's per-item memo
+    (match.py:1029-1048).
     """
     out_matched, out_kind, out_rule = [], [], []
     memo: dict[tuple, tuple] = {}
-    for l, r, e, p, lh, rh in zip(
-        left, right, endings, places, left_hamlet, right_hamlet
+    for ls, rs, e, p, lh, rh in zip(
+        left_names, right_names, endings, places, left_hamlet, right_hamlet
     ):
         e_key = tuple(e) if e is not None else None
         p_key = tuple(p) if p is not None else None
         lh, rh = bool(lh), bool(rh)
-        key = (l, r, e_key, p_key, lh, rh)
-        if key in memo:
-            res = memo[key]
-        else:
-            decision = None
-            if l is not None and r is not None:
-                decision = match_names(
-                    l, r, endings=_strip_house(e_key, rh), place_names=p_key
-                )
-                if not decision:
-                    decision = match_names(
+        matched, kind, rule = False, None, None
+        for l in ls:
+            for r in rs:
+                if l is None or r is None:
+                    continue
+                key = (l, r, e_key, p_key, lh, rh)
+                if key not in memo:
+                    memo[key] = match_names(
+                        l, r, endings=_strip_house(e_key, rh), place_names=p_key
+                    ) or match_names(
                         r, l, endings=_strip_house(e_key, lh), place_names=p_key
                     )
-            res = (
-                (True, decision.kind, decision.rule)
-                if decision
-                else (False, None, None)
-            )
-            memo[key] = res
-        out_matched.append(res[0])
-        out_kind.append(res[1])
-        out_rule.append(res[2])
+                decision = memo[key]
+                if decision:
+                    matched = True
+                    kind = decision.kind if kind is None else min(kind, decision.kind)
+                    rule = decision.rule if rule is None else min(rule, decision.rule)
+        out_matched.append(matched)
+        out_kind.append(kind)
+        out_rule.append(rule)
     return pd.DataFrame(
         {"matched": out_matched, "kind": out_kind, "rule": out_rule}
     )

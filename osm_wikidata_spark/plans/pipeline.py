@@ -10,7 +10,8 @@ Stages (each checkpointable, each audited):
         │                        │ salted self-join
         │                        ▼
         │                    pairs (left_id, right_id, block_key)
-        │                        │ name cross-product → pandas-UDF cascade
+        │                        │ ⋈ entities on each side → one pandas-UDF
+        │                        │ call per pair over its name cross-product
         │                        ▼
         │                    edges (matched pairs, kind, rule)
         │                        │ union-find (≤ 2^20 edges; a durable
@@ -186,20 +187,30 @@ def score_pairs(
     entities: DataFrame,
     endings: list[str] | None = None,
 ) -> DataFrame:
-    """Name cross-product scoring of candidate pairs via the kernel UDF.
+    """Decide each candidate pair over its name cross-product in one Arrow
+    pass: pairs ⋈ entities (left) ⋈ entities (right), then one
+    :func:`pair_decision_udf` call per pair.
 
+    ``pairs`` carries ``left_id``, ``right_id`` and ``block_key``;
     ``entities`` carries ``conv_id``, ``names``, ``endings``,
     ``place_names`` and ``is_hamlet`` (the :func:`extract_entities`
-    schema); null arrays count as empty and a null flag as false.
+    schema).  Null ``endings``/``place_names`` count as empty and a null
+    flag as false; an entity whose ``names`` is null or empty has no
+    pairs.  The UDF memoises each name crossing on ``(left_name,
+    right_name, endings, places, left_hamlet, right_hamlet)`` for one
+    Arrow batch, the batch-wide form of the reference's memo cache
+    (match.py:1029-1048).
 
-    Each entity's decision context rides the two entity joins as one
-    struct ``ctx`` of (endings, places, hamlet).  Exact (name pair, both
-    contexts) rows are deduplicated before the UDF, scored once and joined
-    back: the set-level equivalent of the reference's memo cache
-    (match.py:1029-1048), keyed on ``(left_name, right_name, left_ctx,
-    right_ctx)``.  The struct's arrays are sorted so that one context set
-    is one key whatever order its entity row lists it in; the key holds
-    the arrays themselves, so two distinct contexts never share a key.
+    There is no aggregate after the UDF, so the output holds one row per
+    ``pairs`` row (``block_key`` passes through) and the caller keeps two
+    facts:
+
+    * ``pairs`` holds one row per ``(left_id, right_id)``.
+      ``salted_pair_join``'s ``groupBy``, the snm ``groupBy``, the cnp
+      semi-join over them and incremental's ``dropDuplicates`` each
+      guarantee it.
+    * ``entities`` holds one row per ``conv_id``: one ``groupBy`` row each
+      in :func:`extract_entities` and incremental's merge.
 
     The trim set per pair = GLOBAL_ENDINGS (or the ``endings`` override;
     ``[]`` trims no global ending) ∪ both sides' per-entity endings,
@@ -211,12 +222,12 @@ def score_pairs(
     hamlet house-trim gate stays per side (matcher.py:1036-1046).
     """
     empty = F.array().cast("array<string>")
-    ent = entities.select(
+    ent = entities.filter(F.size("names") > 0).select(
         "conv_id",
         "names",
         F.struct(
-            F.array_sort(F.coalesce("endings", empty)).alias("endings"),
-            F.array_sort(F.coalesce("place_names", empty)).alias("places"),
+            F.coalesce("endings", empty).alias("endings"),
+            F.coalesce("place_names", empty).alias("places"),
             F.coalesce("is_hamlet", F.lit(False)).alias("hamlet"),
         ).alias("ctx"),
     )
@@ -228,32 +239,13 @@ def score_pairs(
             F.col("ctx").alias(f"{side}_ctx"),
         )
 
-    exploded = (
-        pairs.join(_side("left"), "left_id")
-        .join(_side("right"), "right_id")
-        .select(
-            "left_id", "right_id", "block_key", "left_ctx", "right_ctx",
-            F.explode("left_names").alias("left_name"),
-            "right_names",
-        )
-        .select(
-            "left_id", "right_id", "block_key", "left_ctx", "right_ctx",
-            "left_name",
-            F.explode("right_names").alias("right_name"),
-        )
-    )
-
     global_endings = F.array(
         *[F.lit(e) for e in (GLOBAL_ENDINGS if endings is None else endings)]
     ).cast("array<string>")
     places = F.array_union("left_ctx.places", "right_ctx.places")
-    # the cascade is asymmetric (record-side-only retries like drop_initials,
-    # match.py:688-693) and transcripts have no record/entity sides, so the
-    # UDF scores both directions INSIDE one call (pair_decision_udf): one
-    # Arrow round-trip per row, reverse direction short-circuited on match
     decision = pair_decision_udf(
-        "left_name",
-        "right_name",
+        "left_names",
+        "right_names",
         F.array_sort(
             F.array_union(
                 global_endings,
@@ -264,27 +256,11 @@ def score_pairs(
         F.col("left_ctx.hamlet"),
         F.col("right_ctx.hamlet"),
     )
-
-    key = ["left_name", "right_name", "left_ctx", "right_ctx"]
-    scored_names = (
-        exploded.select(*key).dropDuplicates(key)
-        .select(*key, decision.alias("decision"))
-    )
-    # the join back is pinned to a sort-merge join.  Unpinned, AQE
-    # broadcast whichever side's shuffle it had measured first: when
-    # the exploded side finished before the scored side's shuffle was
-    # submitted, the scored shuffle was dropped, otherwise it ran too,
-    # and the edges write took one job and four stages more.  Pinned,
-    # both sides shuffle every time; AQE still splits skewed keys.
-    scored = exploded.join(scored_names.hint("merge"), key)
     return (
-        scored.groupBy("left_id", "right_id")
-        .agg(
-            F.min("block_key").alias("block_key"),
-            F.max(F.col("decision.matched")).alias("matched"),
-            F.min(F.when(F.col("decision.matched"), F.col("decision.kind"))).alias("kind"),
-            F.min(F.when(F.col("decision.matched"), F.col("decision.rule"))).alias("rule"),
-        )
+        pairs.join(_side("left"), "left_id")
+        .join(_side("right"), "right_id")
+        .select("left_id", "right_id", "block_key", decision.alias("d"))
+        .select("left_id", "right_id", "block_key", "d.*")
     )
 
 

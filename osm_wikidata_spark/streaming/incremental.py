@@ -231,8 +231,8 @@ def _merge_entity_rows(entities: DataFrame) -> DataFrame:
     ending rules) or is itself a set/flag — the union of the partial
     rows' arrays equals a fresh ``extract_entities`` over the full
     conversation, and the decision context treats endings / place_names
-    as order-insensitive sets (``score_pairs`` sorts them into its
-    context struct).  Idempotent, so a retried identical micro-batch still
+    as order-insensitive sets (``score_pairs`` sorts each pair's union
+    of them).  Idempotent, so a retried identical micro-batch still
     collapses to the same row.
     """
     return entities.groupBy("conv_id").agg(

@@ -220,11 +220,16 @@ def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatc
     jobs).  Its blocks stage explodes the entities' tokens with no dedup,
     so the cap's size aggregate and the write run no dedup exchange (4
     jobs).  With no key hot its pairs stage is the plain join, the pair
-    dedup and the write (3 jobs).  The edges stage carries each entity's
-    context on the entity joins, so no context table is built and
-    broadcast beside them (8 jobs).  The components stage passes the
-    matched count the edges write observed to connected_components, so
-    union-find runs with no canonical dedup or checkpoint (3 jobs)."""
+    dedup and the write (3 jobs).  The edges stage joins the entities onto
+    both sides of each pair by broadcast and decides the pair in one UDF
+    call, with no explode, dedup, join back or aggregate: two broadcasts
+    and the write (3 jobs).  At this size the pairs table is smaller than
+    the entities, so the first join broadcasts the pairs; once the
+    entities are the smaller side (as on a 500×6 input) both joins reuse
+    one entity broadcast and the stage takes 2 jobs.  The
+    components stage passes the matched count the edges write observed to
+    connected_components, so union-find runs with no canonical dedup or
+    checkpoint (3 jobs)."""
     from osm_wikidata_spark.plans import pipeline
 
     real_stage = pipeline.stage
@@ -249,5 +254,5 @@ def test_durable_entities_and_pairs_stage_job_counts(spark, tmp_path, monkeypatc
     assert jobs["entities"] <= 2
     assert jobs["blocks"] <= 4
     assert jobs["pairs"] <= 3
-    assert jobs["edges"] <= 8
+    assert jobs["edges"] <= 3
     assert jobs["components"] <= 3

@@ -50,7 +50,7 @@ def _dir_endings(a: str, b: str) -> set[str]:
     match_names(a, b), where ``b`` is the item side: "house" is discarded
     iff the ITEM is a hamlet (matcher.py:1036-1046's per-item
     ``trim_house=not item.is_hamlet()``) — exactly what the pipeline's
-    pair_decision_udf applies per direction."""
+    pair_decision_udf applies per direction of each name crossing."""
     endings = set(GLOBAL_ENDINGS)
     for name in (a, b):
         # raw name words, not blocking tokens: stopwords ("house") still

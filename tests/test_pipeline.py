@@ -11,6 +11,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from osm_wikidata_spark.functions.udfs import DECISION_SCHEMA
 from osm_wikidata_spark.operators.blocking import (
     build_blocks,
     capped_blocks,
@@ -243,23 +244,201 @@ def test_pipeline_salts_a_block_over_256_rows(spark, monkeypatch):
     assert "REPARTITION_BY_NUM" not in pairs_plan(200)
 
 
-def test_score_pairs_join_back_is_sort_merge(spark):
-    """The scored name pairs join back to the exploded pairs by a
-    sort-merge join in every run: a join AQE may turn into a broadcast
-    of whichever side it measured first cost one job more in some runs
-    than in others."""
+def test_score_pairs_is_one_arrow_pass(spark):
+    """score_pairs decides each pair in one UDF call over its joined
+    entity rows: the executed plan holds one ArrowEvalPython, no
+    aggregate after it and no sort-merge join (the entity joins
+    broadcast)."""
     from osm_wikidata_spark.plans.pipeline import score_pairs
 
     transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=3)
     entities = extract_entities(transcripts).localCheckpoint()
     blocks, _ = capped_blocks(build_blocks(entities, "conv_id", "tokens"), 1000)
-    pairs = salted_pair_join(blocks, blocks).filter(F.col("left_id") < F.col("right_id"))
+    pairs = (
+        salted_pair_join(blocks, blocks)
+        .filter(F.col("left_id") < F.col("right_id"))
+        .localCheckpoint()
+    )
     edges = score_pairs(pairs, entities)
     assert edges.collect()
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
-    joins = [line for line in plan.splitlines() if "left_name" in line and "Join" in line]
-    assert joins and all("SortMergeJoin" in line for line in joins), plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, plan
+    assert "HashAggregate" not in final, plan
+    assert "SortMergeJoin" not in final, plan
+
+
+def _score_pairs_oracle(pairs, entities):
+    """score_pairs' former plan: explode both name lists, deduplicate the
+    crossings, score each with one per-crossing UDF call, join the scores
+    back and group by pair."""
+    import pandas as pd
+
+    from osm_wikidata_spark.functions.udfs import _strip_house
+    from osm_wikidata_spark.kernel.cascade import match_names
+    from osm_wikidata_spark.sources.transcripts import GLOBAL_ENDINGS
+
+    # nested, so that the workers unpickle it by value
+    @F.pandas_udf(DECISION_SCHEMA)
+    def name_pair_decision(left, right, endings, places, left_hamlet, right_hamlet):
+        out = []
+        for l, r, e, p, lh, rh in zip(
+            left, right, endings, places, left_hamlet, right_hamlet
+        ):
+            e_key = tuple(e) if e is not None else None
+            p_key = tuple(p) if p is not None else None
+            decision = None
+            if l is not None and r is not None:
+                decision = match_names(
+                    l, r, endings=_strip_house(e_key, bool(rh)), place_names=p_key
+                ) or match_names(
+                    r, l, endings=_strip_house(e_key, bool(lh)), place_names=p_key
+                )
+            out.append(
+                (True, decision.kind, decision.rule) if decision else (False, None, None)
+            )
+        return pd.DataFrame(out, columns=["matched", "kind", "rule"])
+
+    empty = F.array().cast("array<string>")
+    ent = entities.select(
+        "conv_id",
+        "names",
+        F.struct(
+            F.array_sort(F.coalesce("endings", empty)).alias("endings"),
+            F.array_sort(F.coalesce("place_names", empty)).alias("places"),
+            F.coalesce("is_hamlet", F.lit(False)).alias("hamlet"),
+        ).alias("ctx"),
+    )
+
+    def _side(side):
+        return ent.select(
+            F.col("conv_id").alias(f"{side}_id"),
+            F.col("names").alias(f"{side}_names"),
+            F.col("ctx").alias(f"{side}_ctx"),
+        )
+
+    exploded = (
+        pairs.join(_side("left"), "left_id")
+        .join(_side("right"), "right_id")
+        .select(
+            "left_id", "right_id", "block_key", "left_ctx", "right_ctx",
+            F.explode("left_names").alias("left_name"), "right_names",
+        )
+        .select(
+            "left_id", "right_id", "block_key", "left_ctx", "right_ctx",
+            "left_name", F.explode("right_names").alias("right_name"),
+        )
+    )
+    places = F.array_union("left_ctx.places", "right_ctx.places")
+    decision = name_pair_decision(
+        "left_name",
+        "right_name",
+        F.array_sort(
+            F.array_union(
+                F.array(*[F.lit(e) for e in GLOBAL_ENDINGS]).cast("array<string>"),
+                F.array_union("left_ctx.endings", "right_ctx.endings"),
+            )
+        ),
+        F.when(F.size(places) > 0, F.array_sort(places)),
+        F.col("left_ctx.hamlet"),
+        F.col("right_ctx.hamlet"),
+    )
+    key = ["left_name", "right_name", "left_ctx", "right_ctx"]
+    scored_names = (
+        exploded.select(*key).dropDuplicates(key).select(*key, decision.alias("decision"))
+    )
+    return (
+        exploded.join(scored_names.hint("merge"), key)
+        .groupBy("left_id", "right_id")
+        .agg(
+            F.min("block_key").alias("block_key"),
+            F.max(F.col("decision.matched")).alias("matched"),
+            F.min(F.when(F.col("decision.matched"), F.col("decision.kind"))).alias("kind"),
+            F.min(F.when(F.col("decision.matched"), F.col("decision.rule"))).alias("rule"),
+        )
+    )
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint", "string"])
+def test_score_pairs_equals_exploded_oracle(spark, id_type):
+    """score_pairs equals its former explode → dedup → UDF → join back →
+    groupBy plan on entities with 2-3 names each, mixed endings, places
+    and hamlet flags.  Pair (0, 1)'s minimum kind and minimum rule come
+    from different name crossings.  A null name never matches; entities
+    with empty or null names, and ids missing from entities, drop their
+    pairs."""
+    import random
+
+    from osm_wikidata_spark.plans.pipeline import score_pairs
+    from osm_wikidata_spark.sources.transcripts import VARIANT_GROUPS
+
+    def _id(i):
+        return f"e{i:03d}" if id_type == "string" else i
+
+    rng = random.Random(13)
+    pool = sorted({n for group in VARIANT_GROUPS for n in group})
+    rows = [
+        (_id(0), ["Oxmoor Mall", "Riverbank Museum"], [], [], False),
+        (_id(1), ["Riverbank Museum", "Oxmoor Center"], [], [], False),
+        (_id(2), [None, "Riverbank Museum", "Oakway"], ["house"], None, None),
+        (_id(3), [], [], [], False),
+        (_id(4), None, [], [], False),
+    ]
+    for i in range(5, 29):
+        rows.append(
+            (
+                _id(i),
+                rng.sample(pool, rng.choice([2, 3])),
+                rng.choice([[], ["house"], ["academy", "house"], None]),
+                rng.choice([[], ["Felbrigg"], ["Dorset", "Felbrigg"], None]),
+                rng.choice([True, False, None]),
+            )
+        )
+    entities = spark.createDataFrame(
+        rows,
+        f"conv_id {id_type}, names array<string>, endings array<string>, "
+        "place_names array<string>, is_hamlet boolean",
+    ).cache()
+    ids = [r[0] for r in rows] + [_id(99)]  # 99: in no entity row
+    pairs = spark.createDataFrame(
+        [(a, b, f"k{(ia + ib) % 3}") for (ia, a), (ib, b) in
+         itertools.combinations(enumerate(ids), 2)],
+        f"left_id {id_type}, right_id {id_type}, block_key string",
+    )
+
+    got = sorted(map(tuple, score_pairs(pairs, entities).collect()))
+    want = sorted(map(tuple, _score_pairs_oracle(pairs, entities).collect()))
+    assert got == want
+    by_pair = {(r[0], r[1]): r[3:] for r in got}
+    assert by_pair[(_id(0), _id(1))] == (True, "both_trimmed", "identical")
+    dropped = {_id(3), _id(4), _id(99)}
+    assert not any(a in dropped or b in dropped for a, b in by_pair)
+    assert len(got) == len(list(itertools.combinations(range(len(rows) - 2), 2)))
+    assert any(m for m, _, _ in by_pair.values()) and not all(
+        m for m, _, _ in by_pair.values()
+    )
+
+
+@pytest.mark.parametrize(
+    "kwargs", [{}, {"snm_window": 3, "cnp_k": 2}], ids=["default", "snm_cnp"]
+)
+def test_durable_stages_hold_one_row_per_key(spark, tmp_path, kwargs):
+    """score_pairs keeps no aggregate after its UDF, so it relies on its
+    inputs' keys: a durable run's pairs and edges hold one row per
+    (left_id, right_id) and its entities one row per conv_id, with and
+    without the snm and cnp channels."""
+    transcripts, _ = synth_transcripts(spark, n_conversations=60, turns_per_conv=3)
+    out = run_pipeline(spark, transcripts, run_dir=str(tmp_path / "run"), **kwargs)
+
+    def _repeated(df, keys):
+        return df.groupBy(*keys).count().filter(F.col("count") > 1).count()
+
+    assert out["pairs"].count() > 0
+    assert _repeated(out["pairs"], ["left_id", "right_id"]) == 0
+    assert _repeated(out["edges"], ["left_id", "right_id"]) == 0
+    assert _repeated(out["entities"], ["conv_id"]) == 0
+    assert out["edges"].count() == out["pairs"].count()
 
 
 def test_per_entity_endings_cluster(spark):
