@@ -17,55 +17,28 @@ where its LATER document arrives, which by then sees every shared
 bucket), and ``incremental_components`` preserves min-labels.
 
 With ``max_bucket`` set, the cap is PROGRESSIVE: once a bucket's global
-membership exceeds the cap it stops emitting new pairs (anti-join against
-the broadcast hot list, the blocks-path pattern from incremental.py), but
+membership exceeds the cap it stops emitting new pairs (``chain.hot_cap``,
+the cap the blocks path of incremental.py uses too), but
 pairs it emitted while small persist — streaming outputs are append-only,
 so the batch run's drop-the-whole-bucket semantics cannot be replayed.
 That divergence is inherent to any monotone streaming cap and is the
 documented contract, mirrored by `incremental_edges_batch`'s global
 re-cap of accumulated blocks.
 
-State rides the same object-store-safe manifest CHAIN layout as
-incremental.py — write O(batch), read merges the chain: a normal commit
-appends a generation whose ``band_keys`` hold ONLY the batch's rows;
-readers union the chain (duplicate rows from a replayed batch are
-absorbed by count_distinct bucket sizing and the final pair groupBy);
-every ``compact_every`` commits the chain folds into one deduplicated
-base generation (the amortised O(corpus) write).  ``assignments``
-(node, component) stays a full narrow table per commit.
+State — the batch's ``band_keys`` deltas plus the full ``assignments``
+map — lives in the delta chain of :mod:`.chain` (layout and crash
+safety documented there); replayed-batch duplicates are absorbed by the
+hot cap's distinct member count and the final pair ``groupBy``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.components import incremental_components
 from ..operators.dedup import minhash_band_keys
-from .incremental import _chain, _commit_generation, _plan_commit
+from .chain import commit, hot_cap, stream_batches, with_chain
 
 DOCUMENT_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-
-
-def _live_path(state_dir: str, name: str) -> str | None:
-    """Newest chain generation carrying a complete ``name`` table (the
-    full-table-per-commit pattern: assignments)."""
-    for gen in reversed(_chain(state_dir)):
-        path = os.path.join(state_dir, gen, name)
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            return path
-    return None
-
-
-def _chain_paths(state_dir: str, name: str) -> list[str]:
-    """Every chain generation's complete ``name`` table, oldest first
-    (the delta-per-commit pattern: band_keys).  A chain member without a
-    ``_SUCCESS`` marker is skipped — it cannot exist after a clean
-    commit, so this only arises for a table the generation never carried
-    (e.g. legacy layouts)."""
-    paths = [os.path.join(state_dir, gen, name) for gen in _chain(state_dir)]
-    return [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
 
 
 def incremental_neardup_batch(
@@ -88,29 +61,11 @@ def incremental_neardup_batch(
         batch_docs, id_col, text_col, n_hashes, bands, shingle_n
     )
 
-    live = _chain_paths(state_dir, "band_keys")
-    if live:
-        # raw union — no eager corpus-wide dedup: duplicate rows (a
-        # replayed micro-batch's re-appended delta) are absorbed by the
-        # count_distinct sizing below and the final pair groupBy
-        all_keys = spark.read.parquet(*live).unionByName(new_keys)
-    else:
-        all_keys = new_keys
-
-    # progressive cap against GLOBAL bucket sizes (see module docstring);
-    # the hot list is small by construction -> broadcast anti-join, the
-    # same shape incremental_edges_batch uses for hot blocks
-    if max_bucket is not None:
-        sizes = all_keys.groupBy("band", "bucket").agg(
-            F.count_distinct("doc").alias("n")
-        )
-        hot = F.broadcast(
-            sizes.filter(F.col("n") > max_bucket).select("band", "bucket")
-        )
-        probe = new_keys.join(hot, ["band", "bucket"], "left_anti")
-        build = all_keys.join(hot, ["band", "bucket"], "left_anti")
-    else:
-        probe, build = new_keys, all_keys
+    all_keys = with_chain(spark, state_dir, "band_keys", new_keys)
+    # progressive cap against GLOBAL bucket sizes (see module docstring)
+    probe, build = hot_cap(
+        all_keys, ["band", "bucket"], "doc", max_bucket, new_keys
+    )
 
     # (no corpus-side bucket pre-prune here: same measured negative
     # result as incremental_edges_batch — the probe side broadcasts, so
@@ -135,28 +90,12 @@ def incremental_neardup_batch(
     # are in `build`), so min(band) matches the full batch recompute.
     pairs = pairs.localCheckpoint(eager=True)
 
-    _, gen, compact, new_chain = _plan_commit(state_dir, compact_every)
-    gen_dir = os.path.join(state_dir, gen)
-    if compact:
-        # amortised O(corpus) write: fold the chain + this batch into one
-        # deduplicated base generation
-        all_keys.dropDuplicates(["doc", "band", "bucket"]).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(gen_dir, "band_keys"))
-    else:
-        # O(batch) write: this batch's keys only
-        new_keys.write.mode("overwrite").parquet(os.path.join(gen_dir, "band_keys"))
-
-    prev_path = _live_path(state_dir, "assignments")
-    prev = (
-        spark.read.parquet(prev_path)
-        if prev_path is not None
-        else spark.createDataFrame([], "node bigint, component bigint")
+    commit(
+        state_dir,
+        {"band_keys": (new_keys, all_keys.dropDuplicates(["doc", "band", "bucket"]))},
+        pairs,
+        compact_every,
     )
-    incremental_components(prev, pairs).write.mode("overwrite").parquet(
-        os.path.join(gen_dir, "assignments")
-    )
-    _commit_generation(state_dir, new_chain)
     return pairs
 
 
@@ -169,23 +108,9 @@ def stream_documents(
     max_bucket: int | None = 50,
 ):
     """Wire the incremental near-dup batch into Structured Streaming."""
-    stream = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-
-    def _for_each(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = incremental_neardup_batch(
-            spark, batch_df, state_dir, max_bucket=max_bucket
-        )
-        pairs.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            pairs_dir
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_for_each)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_batches(
+        spark, DOCUMENT_SCHEMA, source_dir, checkpoint_dir, pairs_dir,
+        lambda batch: incremental_neardup_batch(
+            spark, batch, state_dir, max_bucket=max_bucket
+        ),
     )

@@ -124,7 +124,7 @@ def main() -> None:
     if args.neardup:
         from osm_wikidata_spark.operators.components import connected_components
         from osm_wikidata_spark.operators.dedup import minhash_lsh_pairs
-        from osm_wikidata_spark.streaming.incremental import _chain
+        from osm_wikidata_spark.streaming.chain import chain
         from osm_wikidata_spark.streaming.neardup import incremental_neardup_batch
 
         base_docs = _documents(spark, 0, args.base).localCheckpoint(eager=True)
@@ -158,10 +158,10 @@ def main() -> None:
                 ).write.mode("overwrite").format("noop").save()
                 dt = time.monotonic() - t0
                 if not nd_volume:
-                    chain = _chain(state)
+                    gens = chain(state)
                     for label, gen in (
-                        ("base_gen", chain[0]),
-                        ("delta_gen", chain[-1]),
+                        ("base_gen", gens[0]),
+                        ("delta_gen", gens[-1]),
                     ):
                         d = os.path.join(state, gen)
                         nd_volume[f"{label}_bytes"] = _dir_bytes_outer(
@@ -252,10 +252,10 @@ def main() -> None:
             ).write.mode("overwrite").format("noop").save()
             dt = time.monotonic() - t0
             if not write_volume:
-                from osm_wikidata_spark.streaming.incremental import _chain
+                from osm_wikidata_spark.streaming.chain import chain
 
-                chain = _chain(state)
-                base_gen, delta_gen = chain[0], chain[-1]
+                gens = chain(state)
+                base_gen, delta_gen = gens[0], gens[-1]
                 for label, gen in (("base_gen", base_gen), ("delta_gen", delta_gen)):
                     d = os.path.join(state, gen)
                     write_volume[f"{label}_bytes"] = sum(

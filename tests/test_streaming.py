@@ -1,10 +1,12 @@
 """Incremental ingest: new transcript files are blocked and scored against
-the existing index only (streaming/incremental.py)."""
+the existing index only (streaming/incremental.py, streaming/neardup.py,
+both on the delta-chain store of streaming/chain.py)."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_wikidata_spark.sources.transcripts import synth_transcripts
@@ -14,13 +16,21 @@ from osm_wikidata_spark.streaming.incremental import (
 )
 
 
-def test_incremental_batches_equal_full_run(spark, tmp_path):
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_incremental_batches_equal_full_run(spark, tmp_path, id_type):
     transcripts, _ = synth_transcripts(spark, n_conversations=60, turns_per_conv=3)
+    split = "conv-000030"
+    if id_type == "bigint":
+        # "conv-000042" -> 42: the same conversations under bigint ids
+        transcripts = transcripts.withColumn(
+            "conv_id", F.substring("conv_id", 6, 6).cast("bigint")
+        )
+        split = 30
     state = os.path.join(str(tmp_path), "state")
     os.makedirs(state, exist_ok=True)
 
-    batch1 = transcripts.filter(F.col("conv_id") < "conv-000030")
-    batch2 = transcripts.filter(F.col("conv_id") >= "conv-000030")
+    batch1 = transcripts.filter(F.col("conv_id") < split)
+    batch2 = transcripts.filter(F.col("conv_id") >= split)
 
     e1 = incremental_edges_batch(spark, batch1, state).filter("matched").collect()
     e2 = incremental_edges_batch(spark, batch2, state).filter("matched").collect()
@@ -180,32 +190,29 @@ def test_uncommitted_generation_recovery(spark, tmp_path):
     the next batch must build on the pre-crash state."""
     import shutil
 
-    from osm_wikidata_spark.streaming.incremental import (
-        current_generation,
-        state_paths,
-    )
+    from osm_wikidata_spark.streaming.chain import chain, chain_paths
 
     transcripts, _ = synth_transcripts(spark, n_conversations=20, turns_per_conv=2)
     state = os.path.join(str(tmp_path), "state")
     os.makedirs(state, exist_ok=True)
     incremental_edges_batch(spark, transcripts, state)
-    gen1 = current_generation(state)
-    blocks_paths, _ = state_paths(state)
+    gen1 = chain(state)[-1]
+    blocks_paths = chain_paths(state, "blocks")
     assert spark.read.parquet(*blocks_paths).count() > 0
 
     # simulate the crash: a fully-written next generation whose manifest
     # commit never happened (here: a bogus, possibly-partial dir)
     orphan = os.path.join(state, "gen-000009")
     os.makedirs(os.path.join(orphan, "blocks"), exist_ok=True)
-    assert current_generation(state) == gen1  # manifest untouched by crash
+    assert chain(state)[-1] == gen1  # manifest untouched by crash
 
     more, _ = synth_transcripts(spark, n_conversations=25, turns_per_conv=2)
     more = more.filter(F.col("conv_id") >= "conv-000020")
     incremental_edges_batch(spark, more, state)
-    gen2 = current_generation(state)
+    gen2 = chain(state)[-1]
     assert gen2 not in (gen1, "gen-000009")  # orphan never re-used
     assert int(gen2.split("-")[1]) > 9
-    recovered = spark.read.parquet(*state_paths(state)[0])
+    recovered = spark.read.parquet(*chain_paths(state, "blocks"))
     # old conversations' blocks survived the crash
     assert recovered.filter(F.col("block_id") < "conv-000020").count() > 0
     shutil.rmtree(orphan, ignore_errors=True)
@@ -217,10 +224,8 @@ def test_crashed_compaction_orphan_is_invisible(spark, tmp_path):
     of the state.  It must stay invisible — read counts stay exact (no
     double-counted conversations), its number is skipped, and it is GC'd
     once commits age past it."""
-    from osm_wikidata_spark.streaming.incremental import (
-        _chain,
-        read_state,
-    )
+    from osm_wikidata_spark.streaming.chain import chain
+    from osm_wikidata_spark.streaming.incremental import read_state
 
     transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=2)
     state = os.path.join(str(tmp_path), "state")
@@ -231,7 +236,7 @@ def test_crashed_compaction_orphan_is_invisible(spark, tmp_path):
             (F.col("conv_id") >= lo) & (F.col("conv_id") < hi)
         )
         incremental_edges_batch(spark, batch, state, compact_every=8)
-    assert _chain(state) == ["gen-000001", "gen-000002"]
+    assert chain(state) == ["gen-000001", "gen-000002"]
 
     # simulate the crashed compaction: a fully-written base generation
     # (complete folded state) whose manifest commit never happened
@@ -239,7 +244,7 @@ def test_crashed_compaction_orphan_is_invisible(spark, tmp_path):
     orphan = os.path.join(state, "gen-000003")
     blocks.write.parquet(os.path.join(orphan, "blocks"))
     entities.write.parquet(os.path.join(orphan, "entities"))
-    assert _chain(state) == ["gen-000001", "gen-000002"]  # manifest untouched
+    assert chain(state) == ["gen-000001", "gen-000002"]  # manifest untouched
 
     # the orphan's full copy is invisible: counts are exact
     _b2, e2 = read_state(spark, state)
@@ -251,7 +256,7 @@ def test_crashed_compaction_orphan_is_invisible(spark, tmp_path):
         (F.col("conv_id") >= "conv-000020") & (F.col("conv_id") < "conv-000030")
     )
     incremental_edges_batch(spark, batch3, state, compact_every=8)
-    assert _chain(state) == ["gen-000001", "gen-000002", "gen-000004"]
+    assert chain(state) == ["gen-000001", "gen-000002", "gen-000004"]
     _b3, e3 = read_state(spark, state)
     assert e3.count() == 30
     assert e3.groupBy("conv_id").count().filter("count > 1").count() == 0
@@ -267,48 +272,6 @@ def test_crashed_compaction_orphan_is_invisible(spark, tmp_path):
     assert e4.count() == 40
 
 
-def test_legacy_flat_state_migrates(spark, tmp_path):
-    """Pre-manifest state (<state>/blocks + <state>/entities, the layout
-    the directory-rename implementation wrote) must be adopted on upgrade —
-    not silently rebuilt from empty — then folded into the first committed
-    generation and GC'd."""
-    from osm_wikidata_spark.streaming.incremental import (
-        current_generation,
-        state_paths,
-    )
-
-    transcripts, _ = synth_transcripts(spark, n_conversations=20, turns_per_conv=2)
-    state = os.path.join(str(tmp_path), "state")
-    os.makedirs(state, exist_ok=True)
-    # build real state, then rewrite it in the legacy flat layout
-    incremental_edges_batch(spark, transcripts, state)
-    blocks_paths, entities_paths = state_paths(state)
-    spark.read.parquet(*blocks_paths).write.parquet(os.path.join(state, "blocks"))
-    spark.read.parquet(*entities_paths).write.parquet(
-        os.path.join(state, "entities")
-    )
-    os.remove(os.path.join(state, "MANIFEST"))
-    for name in list(os.listdir(state)):
-        if name.startswith("gen-"):
-            import shutil
-
-            shutil.rmtree(os.path.join(state, name))
-
-    # legacy layout is visible without a manifest
-    assert current_generation(state) is None
-    assert state_paths(state)[0] == [os.path.join(state, "blocks")]
-
-    more, _ = synth_transcripts(spark, n_conversations=25, turns_per_conv=2)
-    more = more.filter(F.col("conv_id") >= "conv-000020")
-    incremental_edges_batch(spark, more, state)
-    # old conversations' blocks were folded into the new generation...
-    recovered = spark.read.parquet(*state_paths(state)[0])
-    assert recovered.filter(F.col("block_id") < "conv-000020").count() > 0
-    # ...and the legacy dirs are gone
-    assert not os.path.exists(os.path.join(state, "blocks"))
-    assert not os.path.exists(os.path.join(state, "entities"))
-
-
 def test_generation_chain_compaction_and_gc(spark, tmp_path):
     """Delta-chain lifecycle: commits append batch-sized delta generations
     to the manifest chain; crossing ``compact_every`` folds the chain into
@@ -316,11 +279,8 @@ def test_generation_chain_compaction_and_gc(spark, tmp_path):
     survives exactly one more commit (lazy-plan grace — compaction retires
     a whole chain at once, so all of it must outlive the compacting
     commit); and the merged read recovers everything."""
-    from osm_wikidata_spark.streaming.incremental import (
-        _chain,
-        current_generation,
-        read_state,
-    )
+    from osm_wikidata_spark.streaming.chain import chain
+    from osm_wikidata_spark.streaming.incremental import read_state
 
     transcripts, _ = synth_transcripts(spark, n_conversations=40, turns_per_conv=2)
     state = os.path.join(str(tmp_path), "state")
@@ -333,8 +293,8 @@ def test_generation_chain_compaction_and_gc(spark, tmp_path):
         )
         incremental_edges_batch(spark, batch, state, compact_every=2)
     # batch 3 crossed compact_every=2: chain is the single base gen-000003
-    assert _chain(state) == ["gen-000003"]
-    assert current_generation(state) == "gen-000003"
+    assert chain(state) == ["gen-000003"]
+    assert chain(state)[-1] == "gen-000003"
     gens = sorted(n for n in os.listdir(state) if n.startswith("gen-"))
     # the compacting commit retired [gen-000001, gen-000002]; BOTH must
     # survive it — a reader holding the pre-compaction manifest has lazy
@@ -352,7 +312,7 @@ def test_generation_chain_compaction_and_gc(spark, tmp_path):
         (F.col("conv_id") >= "conv-000030") & (F.col("conv_id") < "conv-000040")
     )
     incremental_edges_batch(spark, batch4, state, compact_every=2)
-    assert _chain(state) == ["gen-000003", "gen-000004"]
+    assert chain(state) == ["gen-000003", "gen-000004"]
     gens = sorted(n for n in os.listdir(state) if n.startswith("gen-"))
     assert gens == ["gen-000003", "gen-000004"]
     _blocks2, entities2 = read_state(spark, state)
@@ -424,7 +384,7 @@ def test_incremental_assignments_equal_batch_cc(spark, tmp_path):
     """Each committed generation's assignment table equals a full
     connected-components recompute over every matched edge seen so far."""
     from osm_wikidata_spark.operators.components import connected_components
-    from osm_wikidata_spark.streaming.incremental import assignments_path
+    from osm_wikidata_spark.streaming.chain import live_path
 
     transcripts, _ = synth_transcripts(spark, n_conversations=60, turns_per_conv=3)
     state = os.path.join(str(tmp_path), "state")
@@ -439,7 +399,7 @@ def test_incremental_assignments_equal_batch_cc(spark, tmp_path):
         all_edges += edges.filter("matched").select("left_id", "right_id").collect()
         got = {
             r["node"]: r["component"]
-            for r in spark.read.parquet(assignments_path(state)).collect()
+            for r in spark.read.parquet(live_path(state, "assignments")).collect()
         }
         full = spark.createDataFrame(
             [(r["left_id"], r["right_id"]) for r in all_edges],
@@ -506,20 +466,25 @@ def _neardup_corpus(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_incremental_neardup_equals_full_run(spark, tmp_path):
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_incremental_neardup_equals_full_run(spark, tmp_path, id_type):
     """Uncapped: unioned per-batch pairs == batch minhash_lsh_pairs over
     the whole corpus, and committed assignments == full CC recompute.
     Runs with ``compact_every=2`` so the third commit COMPACTS the delta
-    chain mid-test — the fold must not change any answer."""
+    chain mid-test — the fold must not change any answer.  String ids
+    ("d07") run the same corpus: the first commit's empty assignments
+    must take the ids' type, not bigint."""
     import os
 
     from osm_wikidata_spark.operators import dedup
     from osm_wikidata_spark.operators.components import connected_components
-    from osm_wikidata_spark.streaming.incremental import _chain
-    from osm_wikidata_spark.streaming.neardup import (
-        _live_path,
-        incremental_neardup_batch,
-    )
+    from osm_wikidata_spark.streaming.chain import chain, live_path
+    from osm_wikidata_spark.streaming.neardup import incremental_neardup_batch
+
+    def with_ids(df):
+        if id_type == "bigint":
+            return df
+        return df.withColumn("doc_id", F.format_string("d%02d", "doc_id"))
 
     docs = _neardup_corpus(spark)
     state = os.path.join(str(tmp_path), "nd_state")
@@ -527,13 +492,13 @@ def test_incremental_neardup_equals_full_run(spark, tmp_path):
     for lo, hi in ((0, 10), (10, 20), (20, 30)):
         batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
         got = incremental_neardup_batch(
-            spark, batch, state, max_bucket=None, compact_every=2
+            spark, with_ids(batch), state, max_bucket=None, compact_every=2
         )
         folded |= {(r["left_id"], r["right_id"], r["band"]) for r in got.collect()}
     # batch 3 crossed compact_every=2: the chain is one compacted base
-    assert _chain(state) == ["gen-000003"]
+    assert chain(state) == ["gen-000003"]
 
-    full_pairs = dedup.minhash_lsh_pairs(docs, max_bucket=None)
+    full_pairs = dedup.minhash_lsh_pairs(with_ids(docs), max_bucket=None)
     full = {(r["left_id"], r["right_id"], r["band"]) for r in full_pairs.collect()}
     assert folded == full and full
 
@@ -541,7 +506,7 @@ def test_incremental_neardup_equals_full_run(spark, tmp_path):
         (r["node"], r["component"])
         for r in connected_components(full_pairs).collect()
     }
-    state_assign = spark.read.parquet(_live_path(state, "assignments"))
+    state_assign = spark.read.parquet(live_path(state, "assignments"))
     assert {(r["node"], r["component"]) for r in state_assign.collect()} == want
 
 
